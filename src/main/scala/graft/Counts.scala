@@ -20,7 +20,7 @@ object Counts {
       s"oracleSql entries without a registered query: $stray")
     val json =
       s"""{"queries":$q,"oracles":${SparkEntry.oracleSql.size},""" +
-        s""""rows_only":${rowsOnly.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+        s""""rows_only":${rowsOnly.map(Json.str).mkString("[", ",", "]")}}"""
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/graft-counts.json"), json)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the physical plan of every registered query and flags the
   * scale hazards SURVEY.md §4/§7.3 warns about: cartesian products,
   * broadcast nested-loop joins, and single-partition global windows.
@@ -12,21 +10,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off so executedPlan is a plain walkable tree (AdaptiveSparkPlan
-      // hides children until execution); the audit wants the
-      // POST-EnsureRequirements plan, where requirement-driven exchanges
-      // and sorts actually exist
-      .config("spark.sql.adaptive.enabled", "false")
-      // expose bucket sortBy order to planning (off by default since 3.0)
-      // so the bucketed as-of fast path plans sort-free, as it would on a
-      // cluster with the conf set
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE off so executedPlan is a plain walkable tree (AdaptiveSparkPlan
+    // hides children until execution); the audit wants the
+    // POST-EnsureRequirements plan, where requirement-driven exchanges
+    // and sorts actually exist
+    val spark = LocalSession(4, "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named registry queries to files —
   * the per-query plan evidence trail for optimization rounds
   * (`plans/rN/<query>_{before,after}.txt`).
@@ -17,14 +15,7 @@ object PlanDump {
     require(args.length >= 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <query>...")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4, "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- args.drop(3)) {

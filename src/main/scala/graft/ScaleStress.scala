@@ -30,12 +30,7 @@ import graft.ops.Dedup
   */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
     val base = Tables.documents(spark, "/root/testdata/sf0.1")
       .select(col("doc_id"), col("text"))
@@ -895,9 +890,6 @@ object ScaleStress {
         .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Seq(1, 10, 100))
       else if (args.isEmpty) Seq(1, 10, 100)
       else Seq.empty[Int]
-    if (asofKs.nonEmpty)
-      spark.conf
-        .set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     for (k <- asofKs) {
       val evFull = Tables.events(spark, "/root/testdata/sf0.1")
         .select(col("event_id"), col("user_id"), col("event_type"),

@@ -24,12 +24,7 @@ object ServeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val n = if (args.length > 1) args(1).toInt else 5000
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft_servebench_")
     val path = dir.resolve("kv").toString

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -66,19 +66,14 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = LocalSession.envCpus(8)
     val soakSecs = sys.env.getOrElse("SPARK_GRAFT_SOAK_SECS", "25").toInt
     val work = java.nio.file.Files
       .createTempDirectory("streambench").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming" +
+          ".state.RocksDBStateStoreProvider"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /** SparkSessionExtensions hook exposing the native expressions to SQL:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = graft.LocalSession(4,
+  *   "spark.sql.extensions" -> "graft.functions.GraftExtensions")
   * spark.sql("SELECT cosine_similarity(a.embedding, b.embedding) ...")
   * spark.sql("SELECT minhash_signature(text, 3, 16) ...")
   * }}}

@@ -65,6 +65,8 @@ object Graph {
       .select(col("node"), coalesce(col("out_deg"), lit(0L)).as("out_deg")),
       checkpointDir)
     val nN = deg.count() // bounded: one long, drives the 1/N literals
+    // no edges, no nodes: an empty ranking (1/N is undefined)
+    if (nN == 0L) return latticeRankOut(deg.withColumn("rank", lit(0L)))
     // half-up integer division a/b for a >= 0, b > 0: (2a + b) div 2b
     def halfUp(a: Long, b: Long): Long =
       ((BigInt(a) * 2 + b) / (BigInt(b) * 2)).toLong
@@ -119,9 +121,6 @@ object Graph {
     val sess = e.sparkSession
     import sess.implicits._
     val degRows = deg.select(col("node"), col("out_deg")).collect()
-    if (degRows.isEmpty)
-      return Seq.empty[(Long, Long, Double)]
-        .toDF("node", "out_deg", "pagerank")
     val nodes = degRows.map(_.getLong(0)).sorted
     val idx = nodes.zipWithIndex.toMap
     val n = nodes.length

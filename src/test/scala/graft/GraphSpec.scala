@@ -31,6 +31,18 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect()
     assert(cyc.length == 2 && cyc.forall(_._3 == 0.5))
   }
+  test("pageRank: an empty edge set gives an empty (node, out_deg, " +
+      "pagerank) frame on the driver path and the distributed loop") {
+    val want = Graph.pageRank(Seq((1L, 2L)).toDF("src", "dst"), "src", "dst",
+      iterations = 1).schema.map(f => f.name -> f.dataType)
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (pr <- Seq(Graph.pageRank(empty, "src", "dst", iterations = 3),
+        Graph.pageRank(empty, "src", "dst", iterations = 3,
+          driverEdgeBudget = 0L))) {
+      assert(pr.schema.map(f => f.name -> f.dataType) == want)
+      assert(pr.collect().isEmpty)
+    }
+  }
   test("triangleCounts: triangle corners counted once each, pendant " +
       "scores zero, coefficients match the closed form, direction and " +
       "duplicate edges collapse") {

@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession (local[4],
-  * UTC, ANSI defaults exactly as the driver's Verify harness).
+/** Shared session for all suites — one JVM-wide SparkSession built by
+  * [[LocalSession]] on 4 cores, the conf of the Verify harness.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

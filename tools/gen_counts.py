@@ -10,7 +10,10 @@ Sources of truth:
     `sbt "runMain graft.Counts"` from the live registry
 
 Usage (the close ritual):
-    sbt test && sbt "runMain graft.Counts" && python3 tools/gen_counts.py
+    sbt test; sbt "runMain graft.Counts" && python3 tools/gen_counts.py
+
+The BENCH.md sweep headline and the counts are separate steps: the
+headline is rewritten even when the suite XMLs record a failure.
 """
 import json
 import re
@@ -109,7 +112,7 @@ def rewrite(path, subs):
     return changed
 
 
-def main():
+def sync_counts():
     tests, suites = test_count()
     rc = registry_counts()
     q, rows_only = rc["queries"], len(rc["rows_only"])
@@ -130,7 +133,20 @@ def main():
     ])
     print("rewrote:" if ch else "already in sync:",
           len(ch), "patterns updated")
-    bench_headline()
+
+
+def main():
+    # independent steps: the headline reads only committed files, so a red
+    # suite (which stops the count sync) must not keep it stale
+    failed = []
+    for step in (bench_headline, sync_counts):
+        try:
+            step()
+        except SystemExit as e:
+            print(f"{step.__name__}: {e}", file=sys.stderr)
+            failed.append(step.__name__)
+    if failed:
+        sys.exit(f"failed: {', '.join(failed)}")
 
 
 if __name__ == "__main__":
