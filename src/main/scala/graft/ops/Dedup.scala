@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -579,54 +579,32 @@ object Dedup {
     * switch to large-star/small-star if a pathological high-diameter
     * component shows up.
     *
-    * Cost-based fast path: the pair graph a dedup/cluster pipeline
-    * emits is ORDERS smaller than the corpus (dense cells, near-dup
-    * hits — hundreds to thousands of edges where the corpus has
-    * millions of rows), and each distributed superstep costs a fixed
-    * join + groupBy + checkpoint job. When the symmetrized edge list —
-    * already counted by its eager checkpoint — fits `driverEdgeBudget`,
-    * one collect + exact union-find (union-by-min-root, path
-    * compression: the root of every tree IS the component minimum)
-    * replaces `diameter` supersteps; bigger graphs keep the distributed
-    * loop. Identical (id, component = min reachable id) output either
-    * way — the same adaptive physical-strategy choice AQE makes when it
-    * demotes a shuffle join to broadcast on measured size.
+    * Driver path: the pair graph a dedup/cluster pipeline emits is
+    * ORDERS smaller than the corpus (dense cells, near-dup hits —
+    * hundreds to thousands of edges where the corpus has millions of
+    * rows), and each distributed superstep costs a fixed join + groupBy
+    * + checkpoint job. When the symmetrized edge list fits the
+    * [[DriverGraph]] gate, one union-find replaces `diameter`
+    * supersteps. Identical (id, component = min reachable id) output
+    * either way; the driver path's rows come out sorted by id. A pair
+    * with a NULL endpoint is dropped on both paths.
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 50,
                           checkpointDir: Option[String] = None,
-                          driverEdgeBudget: Long = 2000000L): DataFrame = {
+                          driverEdgeBudget: Long = DriverGraph.Budget)
+      : DataFrame = {
     // checkpoint once — the union below consumes `half` twice, and the
     // upstream pair plan (LSH/shingle self-join) must not recompute.
     // checkpointDir = reliable-checkpoint posture (Ckpt.cut scaladoc)
-    val half = Ckpt.cut(pairs.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")), checkpointDir, eager = true)
+    val half = Ckpt.cut(Graph.edgeList(pairs, srcCol, dstCol),
+      checkpointDir, eager = true)
     val edges = Ckpt.cut(half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
       .distinct(), checkpointDir, eager = true)
-    if (edges.count() <= driverEdgeBudget) {
-      val sp = edges.sparkSession
-      import sp.implicits._
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.select(col("src"), col("dst")).collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // min root wins, so every root is its component min
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      return parent.keysIterator
-        .map(id => (id, find(id))).toSeq.sorted
-        .toDF("id", "component")
-    }
+    val small = DriverGraph.collectWithin(edges, driverEdgeBudget)
+    if (small.isDefined)
+      return componentsDriver(small.get, edges.sparkSession)
     var labels = Ckpt.cut(edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")), checkpointDir, eager = true)
     // labels only ever DECREASE under min-propagation, so the exact label
@@ -637,7 +615,6 @@ object Dedup {
       df.agg(sum(col("component").cast("decimal(38,0)")))
         .head().getDecimal(0)
     var prevSum = labelSum(labels)
-    if (prevSum == null) return labels // empty pair list: no nodes, no work
     var changed = true
     var i = 0
     while (changed && i < maxIters) {
@@ -661,6 +638,31 @@ object Dedup {
     labels
   }
 
+  /** The connected-components driver path: union-find over the node
+    * indices of the collected pairs, the lower index winning each union
+    * — ids are sorted, so every root is its component's minimum id.
+    * Rows come out sorted by id.
+    */
+  private def componentsDriver(pairs: Array[Row],
+                               sess: SparkSession): DataFrame = {
+    import sess.implicits._
+    val g = DriverGraph(pairs)
+    val parent = Array.range(0, g.n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    for (k <- g.src.indices) {
+      val (ra, rb) = (find(g.src(k)), find(g.dst(k)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    g.ids.indices.map(i => (g.ids(i), g.ids(find(i))))
+      .toDF("id", "component")
+  }
+
   /** Connected components via alternating LARGE-STAR / SMALL-STAR edge
     * rewrites (Kiveris et al., "Connected Components in MapReduce and
     * Beyond" — the published O(log n)-round algorithm): every round,
@@ -682,30 +684,31 @@ object Dedup {
     * tiny aggregate; a collision would need two distinct edge sets with
     * equal count and 64-bit hash sum in the same run). Non-convergence
     * inside `maxIters` throws loudly, like the propagation form.
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the pair list;
+    * within it the [[connectedComponents]] union-find runs instead.
+    * Pairs with a NULL endpoint are dropped on both paths.
     */
   def connectedComponentsStar(pairs: DataFrame, srcCol: String,
                               dstCol: String, maxIters: Int = 40,
                               checkpointDir: Option[String] = None,
-                              driverEdgeBudget: Long = 2000000L)
+                              driverEdgeBudget: Long = DriverGraph.Budget)
       : DataFrame = {
     // checkpoint the raw pair list ONCE: `pairs` is typically an expensive
     // upstream plan (LSH/shingle self-join) and is consumed three times
     // below (nodes twice via the union, edges once) — without this the
     // whole upstream recomputes per consumer
     val raw = Ckpt.cut(pairs.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b")), checkpointDir, eager = true)
-    // same cost-based fast path as [[connectedComponents]] (identical
-    // output contract, and union-find beats BOTH distributed forms when
-    // the checkpointed pair list fits the driver budget) — delegate the
-    // PINNED frame, not `pairs`, so the expensive upstream never re-runs
-    if (raw.count() <= driverEdgeBudget)
-      return connectedComponents(raw, "a", "b", maxIters,
-        checkpointDir, driverEdgeBudget)
+      col(dstCol).cast("long").as("b")).na.drop(), checkpointDir,
+      eager = true)
+    // the [[connectedComponents]] driver path: union-find beats BOTH
+    // distributed forms when the pinned pair list fits the gate
+    val small = DriverGraph.collectWithin(raw, driverEdgeBudget)
+    if (small.isDefined)
+      return componentsDriver(small.get, raw.sparkSession)
     val nodes = Ckpt.cut(raw.select(col("a").as("id"))
       .union(raw.select(col("b").as("id"))).distinct(),
       checkpointDir, eager = true)
-    if (nodes.isEmpty)
-      return nodes.withColumn("component", col("id"))
     // canonical orientation: (u = bigger, v = smaller), no self loops
     var edges = Ckpt.cut(raw.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,11 +31,15 @@ object Graph {
     * the edge list stays resident for the whole run) to reliable
     * `checkpoint` under the given path — see [[Ckpt.cut]] for the
     * memory/fault-tolerance budget at 100 TB.
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the distinct edge
+    * list; within it the same lattice recursion runs on the driver.
+    * Edges with a NULL endpoint are dropped on both paths.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, damping: Double = 0.85,
                checkpointDir: Option[String] = None,
-               driverEdgeBudget: Long = 2000000L): DataFrame = {
+               driverEdgeBudget: Long = DriverGraph.Budget): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"pageRank: iterations in [1, 50] (got $iterations)")
     require(damping > 0.0 && damping < 1.0,
@@ -45,17 +49,22 @@ object Graph {
     // ranks are longs in 1e-9 units, every per-edge share and damping
     // product is an exact half-up integer division, so the fold order
     // cannot move a bit — which is what makes the under-budget driver
-    // fast path below parity-safe (the old double recursion summed
+    // path below parity-safe (the old double recursion summed
     // contributions in engine-dependent order and was deliberately left
     // distributed in round 12 for exactly that reason).
     val dNum = math.round(damping * 100).toInt
     require(math.abs(damping * 100 - dNum) < 1e-9,
       s"pageRank: damping must be a multiple of 0.01 for the exact " +
         s"integer recursion (got $damping)")
-    // lazy checkpoints: both materialize during the single deg.count()
-    // action below instead of paying one eager pass each
-    val e = Ckpt.cut(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct(), checkpointDir)
+    // lazy checkpoint: materializes during the gate's count
+    val e = Ckpt.cut(edgeList(edges, srcCol, dstCol).distinct(),
+      checkpointDir)
+    // under the budget the exact lattice recursion runs on the driver
+    // ([[DriverGraph]]) instead of 4 jobs per iteration
+    val small = DriverGraph.collectWithin(e, driverEdgeBudget)
+    if (small.isDefined)
+      return pageRankDriver(DriverGraph(small.get), iterations, dNum,
+        e.sparkSession)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
@@ -64,20 +73,10 @@ object Graph {
         Seq("node"), "left")
       .select(col("node"), coalesce(col("out_deg"), lit(0L)).as("out_deg")),
       checkpointDir)
-    val nN = deg.count() // bounded: one long, drives the 1/N literals
-    // no edges, no nodes: an empty ranking (1/N is undefined)
-    if (nN == 0L) return latticeRankOut(deg.withColumn("rank", lit(0L)))
-    // half-up integer division a/b for a >= 0, b > 0: (2a + b) div 2b
-    def halfUp(a: Long, b: Long): Long =
-      ((BigInt(a) * 2 + b) / (BigInt(b) * 2)).toLong
-    val r0 = halfUp(1000000000L, nN)                  // 1e9/N
-    val base = halfUp((100L - dNum) * 1000000000L, 100L * nN) // (1-d)/N
-    // cost-based fast path (the hits/labelPropagation posture): under
-    // the budget one collect + the exact lattice recursion in driver
-    // integer math replaces 4 jobs per iteration. GraphSpec pins
-    // fast ≡ distributed at driverEdgeBudget = 0.
-    if (e.count() <= driverEdgeBudget)
-      return pageRankDriver(e, deg, iterations, dNum, nN, r0, base)
+    // bounded: one long, drives the 1/N literals; the gate let only a
+    // non-empty edge list through, so N >= 1
+    val nN = deg.count()
+    val (r0, base) = latticeStart(dNum, nN)
     var pr = deg.withColumn("rank", lit(r0))
     for (_ <- 1 to iterations) {
       val dangling = pr.filter(col("out_deg") === 0)
@@ -101,6 +100,22 @@ object Graph {
     latticeRankOut(pr)
   }
 
+  /** The (src, dst) long edge list every dual-path op reads: both
+    * endpoints cast to long, and a row with a NULL endpoint dropped, so
+    * the driver path and the distributed loop see the same edges. */
+  private[ops] def edgeList(edges: DataFrame, srcCol: String,
+                            dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).na.drop()
+
+  /** Half-up integer division a/b for a >= 0, b > 0: (2a + b) div 2b. */
+  private def halfUp(a: Long, b: Long): Long =
+    ((BigInt(a) * 2 + b) / (BigInt(b) * 2)).toLong
+
+  /** pageRank's lattice constants over N nodes: 1e9/N and (1-d)/N. */
+  private def latticeStart(dNum: Int, nN: Long): (Long, Long) =
+    (halfUp(1000000000L, nN), halfUp((100L - dNum) * 1000000000L, 100L * nN))
+
   /** Final projection shared by both pageRank paths: 1e-9-lattice rank
     * half-up-rounded to the 1e-6 output lattice (the hits readout). */
   private def latticeRankOut(pr: DataFrame): DataFrame =
@@ -110,33 +125,21 @@ object Graph {
       .orderBy("node")
 
   /** [[pageRank]]'s under-budget path: the identical lattice recursion
-    * from ONE collect of the distinct edge list — pure integer sums
-    * (overflow-checked), so parity with the distributed supersteps is
-    * exact. GraphSpec pins fast ≡ distributed via
-    * `driverEdgeBudget = 0`.
+    * over the collected distinct edge list, out-degrees from its CSR —
+    * pure integer sums (overflow-checked), so parity with the
+    * distributed supersteps is exact. An empty edge list gives an empty
+    * ranking (1/N is undefined).
     */
-  private def pageRankDriver(e: DataFrame, deg: DataFrame,
-                             iterations: Int, dNum: Int, nN: Long,
-                             r0: Long, base: Long): DataFrame = {
-    val sess = e.sparkSession
+  private def pageRankDriver(g: DriverGraph, iterations: Int, dNum: Int,
+                             sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val degRows = deg.select(col("node"), col("out_deg")).collect()
-    val nodes = degRows.map(_.getLong(0)).sorted
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    val outDeg = new Array[Long](n)
-    degRows.foreach(r => outDeg(idx(r.getLong(0))) = r.getLong(1))
-    val edgeRows = e.select(col("src"), col("dst")).collect()
-    val srcI = new Array[Int](edgeRows.length)
-    val dstI = new Array[Int](edgeRows.length)
-    var k = 0
-    while (k < edgeRows.length) {
-      srcI(k) = idx(edgeRows(k).getLong(0))
-      dstI(k) = idx(edgeRows(k).getLong(1))
-      k += 1
-    }
-    def halfUp(a: Long, b: Long): Long =
-      ((BigInt(a) * 2 + b) / (BigInt(b) * 2)).toLong
+    val n = g.n
+    if (n == 0)
+      return latticeRankOut(Seq.empty[(Long, Long, Long)]
+        .toDF("node", "out_deg", "rank"))
+    val (srcI, dstI) = (g.src, g.dst)
+    val outDeg = Array.tabulate(n)(g.outDegree(_).toLong)
+    val (r0, base) = latticeStart(dNum, n)
     var rank = Array.fill(n)(r0)
     for (_ <- 1 to iterations) {
       var dm = 0L
@@ -145,9 +148,9 @@ object Graph {
         if (outDeg(i) == 0L) dm = Math.addExact(dm, rank(i))
         i += 1
       }
-      val sh = halfUp(dm, nN)
+      val sh = halfUp(dm, n)
       val inflow = new Array[Long](n)
-      k = 0
+      var k = 0
       while (k < srcI.length) {
         val s = srcI(k)
         inflow(dstI(k)) = Math.addExact(inflow(dstI(k)),
@@ -165,7 +168,7 @@ object Graph {
       rank = next
     }
     latticeRankOut(
-      (0 until n).map(i => (nodes(i), outDeg(i), rank(i)))
+      (0 until n).map(i => (g.ids(i), outDeg(i), rank(i)))
         .toDF("node", "out_deg", "rank"))
   }
 
@@ -186,16 +189,19 @@ object Graph {
     * labels ≤ degree). Lineage cut per superstep via [[Ckpt.cut]] —
     * `checkpointDir` switches executor-pinned localCheckpoint to
     * reliable checkpoints for the 1000-executor posture.
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the symmetrized
+    * edge list; within it the same vote runs on the driver. Edges with
+    * a NULL endpoint are dropped on both paths.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int,
                        checkpointDir: Option[String] = None,
-                       driverEdgeBudget: Long = 2000000L,
+                       driverEdgeBudget: Long = DriverGraph.Budget,
                        presymmetrized: Boolean = false): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"labelPropagation: rounds in [1, 20] (got $rounds)")
-    val cast = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val cast = edgeList(edges, srcCol, dstCol)
     // presymmetrized: the caller vouches the input is ALREADY the
     // distinct, self-loop-free, both-orientations edge list (e.g. the
     // pinned Shared.coOrderEdges artifact) — re-symmetrizing it (a 2x
@@ -205,16 +211,16 @@ object Graph {
     val e =
       if (presymmetrized) cast
       else Ckpt.cut(
-        cast.unionByName(edges.select(col(dstCol).cast("long").as("src"),
-          col(srcCol).cast("long").as("dst")))
+        cast.unionByName(cast.select(col("dst").as("src"),
+          col("src").as("dst")))
           .filter(col("src") =!= col("dst")).distinct(), checkpointDir)
-    // cost-based fast path (the connectedComponents driverEdgeBudget
-    // posture): the vote join + count + per-node window cost a fixed
-    // set of jobs per round; under the budget one collect + the exact
-    // integer vote (max count, min-label ties) replaces them. Bigger
-    // graphs keep the distributed loop; GraphSpec pins parity.
-    if (e.count() <= driverEdgeBudget)
-      return labelPropagationDriver(e, rounds)
+    // under the budget the exact integer vote (max count, min-label
+    // ties) runs on the driver ([[DriverGraph]]) instead of the
+    // join + count + window jobs of every round
+    val small = DriverGraph.collectWithin(e, driverEdgeBudget)
+    if (small.isDefined)
+      return labelPropagationDriver(DriverGraph(small.get), rounds,
+        e.sparkSession)
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to rounds) {
@@ -240,40 +246,19 @@ object Graph {
 
   /** [[labelPropagation]]'s under-budget path: the identical
     * deterministic sync vote (most-frequent neighbor label, SMALLEST
-    * label on ties) from ONE collect of the symmetrized edge list —
-    * pure integer comparisons, so parity with the distributed rounds
-    * is exact. GraphSpec pins fast ≡ distributed via
-    * `driverEdgeBudget = 0`.
+    * label on ties) over the CSR of the collected symmetrized edge list
+    * — pure integer comparisons, so parity with the distributed rounds
+    * is exact.
     */
-  private def labelPropagationDriver(e: DataFrame,
-                                     rounds: Int): DataFrame = {
-    val sess = e.sparkSession
+  private def labelPropagationDriver(g: DriverGraph, rounds: Int,
+                                     sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val edgeRows = e.select(col("src"), col("dst")).collect()
-    if (edgeRows.isEmpty)
-      return Seq.empty[(Long, Long, Long)]
-        .toDF("node", "community", "community_size")
-    // the edge list is symmetric, so src covers every node
-    val nodes = edgeRows.map(_.getLong(0)).distinct.sorted
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    // CSR adjacency over node indices (grouped by src)
-    val degree = new Array[Int](n)
-    edgeRows.foreach(r => degree(idx(r.getLong(0))) += 1)
-    val start = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { start(i + 1) = start(i) + degree(i); i += 1 }
-    val fill = start.clone()
-    val nbr = new Array[Int](edgeRows.length)
-    edgeRows.foreach { r =>
-      val s = idx(r.getLong(0))
-      nbr(fill(s)) = idx(r.getLong(1)); fill(s) += 1
-    }
-    var label: Array[Long] = nodes.clone()
+    val (n, start, nbr) = (g.n, g.start, g.nbr)
+    var label: Array[Long] = g.ids.clone()
     val votes = scala.collection.mutable.HashMap.empty[Long, Long]
     for (_ <- 1 to rounds) {
       val next = new Array[Long](n)
-      i = 0
+      var i = 0
       while (i < n) {
         votes.clear()
         var k = start(i)
@@ -296,7 +281,7 @@ object Graph {
     }
     val sizes = scala.collection.mutable.HashMap.empty[Long, Long]
     label.foreach(l => sizes(l) = sizes.getOrElse(l, 0L) + 1L)
-    (0 until n).map(i => (nodes(i), label(i), sizes(label(i))))
+    (0 until n).map(i => (g.ids(i), label(i), sizes(label(i))))
       .toDF("node", "community", "community_size").orderBy("node")
   }
 
@@ -375,25 +360,28 @@ object Graph {
     * round count keeps the result deterministic and engine-replayable
     * (the unrolled-superstep posture); lineage truncates per round.
     * For an undirected graph pass both edge directions.
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the distinct edge
+    * list; within it one multi-source BFS runs on the driver. Edges with
+    * a NULL endpoint and NULL seeds are dropped on both paths.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String, rounds: Int,
-              driverEdgeBudget: Long = 2000000L): DataFrame = {
+              driverEdgeBudget: Long = DriverGraph.Budget): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"bfsHops: rounds in [1, 20] (got $rounds)")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
+    val e = edgeList(edges, srcCol, dstCol).distinct()
       .localCheckpoint(eager = false)
-    val seedD = seeds.select(col(seedCol).cast("long").as("node"))
+    val seedD = seeds.select(col(seedCol).cast("long").as("node")).na.drop()
       .distinct()
-    // cost-based fast path (round 13 — the hits/harmonic posture): min
-    // hop counts are exact integers independent of visit order, so one
-    // collect + a multi-source BFS replaces `rounds` join + min-fold +
-    // checkpoint supersteps, with exact parity (GraphSpec pins it at
-    // driverEdgeBudget = 0). Unlike harmonic there is no seeds×edges
-    // CPU gate: the multi-source BFS visits each edge at most once.
-    if (e.count() <= driverEdgeBudget)
-      return bfsHopsDriver(e, seedD, rounds)
+    // under the budget one multi-source BFS runs on the driver
+    // ([[DriverGraph]]): min hop counts are exact integers independent
+    // of visit order, and the BFS visits each edge at most once (no
+    // seeds × edges cap, unlike harmonic)
+    val small = DriverGraph.collectWithin(e, driverEdgeBudget)
+    if (small.isDefined)
+      return bfsHopsDriver(small.get, seedD.collect().map(_.getLong(0)),
+        rounds, e.sparkSession)
     var dist = seedD.withColumn("hops", lit(0L))
     for (_ <- 1 to rounds) {
       val next = e
@@ -406,37 +394,19 @@ object Graph {
     dist.orderBy("node")
   }
 
-  /** [[bfsHops]]'s under-budget path: one multi-source BFS over a CSR
-    * adjacency from ONE collect of the edge list — first discovery IS
-    * the minimal hop count at unit weights, so parity with the
-    * distributed min-fold supersteps is exact. Seeds absent from the
-    * graph still emit their hops-0 row (the distributed union does).
+  /** [[bfsHops]]'s under-budget path: one multi-source BFS over the CSR
+    * of the collected edge list — first discovery IS the minimal hop
+    * count at unit weights, so parity with the distributed min-fold
+    * supersteps is exact. Seeds absent from the graph still emit their
+    * hops-0 row (the distributed union does).
     */
-  private def bfsHopsDriver(e: DataFrame, seedD: DataFrame,
-                            rounds: Int): DataFrame = {
-    val sess = e.sparkSession
+  private def bfsHopsDriver(edgeRows: Array[Row], seedIds: Array[Long],
+                            rounds: Int, sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val edgeRows = e.select(col("src"), col("dst")).collect()
-    val seedIds = seedD.collect().map(_.getLong(0))
-    val nodes = (edgeRows.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-      ++ seedIds).distinct.sorted
-    if (nodes.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("node", "hops")
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    val degree = new Array[Int](n)
-    edgeRows.foreach(r => degree(idx(r.getLong(0))) += 1)
-    val start = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { start(i + 1) = start(i) + degree(i); i += 1 }
-    val fill = start.clone()
-    val nbr = new Array[Int](edgeRows.length)
-    edgeRows.foreach { r =>
-      val s = idx(r.getLong(0))
-      nbr(fill(s)) = idx(r.getLong(1)); fill(s) += 1
-    }
+    val g = DriverGraph(edgeRows, seedIds)
+    val (n, start, nbr) = (g.n, g.start, g.nbr)
     val hops = Array.fill(n)(-1L)
-    var frontier = seedIds.map(idx).distinct
+    var frontier = seedIds.map(g.index)
     frontier.foreach(hops(_) = 0L)
     var d = 1L
     while (d <= rounds && frontier.nonEmpty) {
@@ -453,7 +423,7 @@ object Graph {
       d += 1
     }
     (0 until n).flatMap(i =>
-        if (hops(i) >= 0L) Some((nodes(i), hops(i))) else None)
+        if (hops(i) >= 0L) Some((g.ids(i), hops(i))) else None)
       .toDF("node", "hops").orderBy("node")
   }
 
@@ -513,34 +483,37 @@ object Graph {
     * scale). Each 1/d term commits to the 1e-6 integer lattice before
     * the per-node fold, so the sum is exact long addition in any
     * partition order (the linkPrediction contract).
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the distinct edge
+    * list, and on seeds·edges ≤ 50·budget; within both, one BFS per
+    * seed runs on the driver. Edges with a NULL endpoint and NULL seeds
+    * are dropped on both paths.
     */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          seeds: DataFrame, seedCol: String,
                          rounds: Int,
-                         driverEdgeBudget: Long = 2000000L,
-                         driverCpuBudget: Long = 100000000L): DataFrame = {
+                         driverEdgeBudget: Long = DriverGraph.Budget)
+      : DataFrame = {
     require(rounds >= 1 && rounds <= 10,
       s"harmonicCentrality: rounds in [1, 10] (got $rounds)")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct()
+    val e = edgeList(edges, srcCol, dstCol).distinct()
       .localCheckpoint(eager = false)
-    val seedD = seeds.select(col(seedCol).cast("long").as("seed"))
+    val seedD = seeds.select(col(seedCol).cast("long").as("seed")).na.drop()
       .distinct().localCheckpoint(eager = false)
-    // cost-based fast path (the connectedComponents driverEdgeBudget
-    // posture), CPU-gated on seeds × edges (the driver BFS does
-    // O(seeds·(nodes+edges)) work, so the edge budget alone would let a
-    // wide seed set run minutes of single-threaded BFS —
-    // driverCpuBudget caps seeds·edges at ~1e8 visited-edge steps,
-    // about a second of driver CPU; named per r12 advice so callers
-    // can tune it alongside driverEdgeBudget). The two gate jobs
-    // (e.count, seedD.count) run against lazily-checkpointed frames
-    // the supersteps reuse when the gate rejects. GraphSpec pins
-    // fast ≡ distributed.
-    val eCount = e.count()
-    if (eCount <= driverEdgeBudget) {
-      val sn = seedD.count()
-      if (sn * math.max(eCount, 1L) <= driverCpuBudget)
-        return harmonicDriver(e, seedD, rounds)
+    // under the budget the per-seed BFS runs on the driver
+    // ([[DriverGraph]]). It does O(seeds·(nodes+edges)) work, so the
+    // seeds are gated too: seeds·edges ≤ 50·budget (1e8 visited-edge
+    // steps at the default, about a second of driver CPU; 0 at budget
+    // 0). Both gates count lazily-checkpointed frames the supersteps
+    // reuse when a gate rejects.
+    val small = DriverGraph.collectWithin(e, driverEdgeBudget)
+    if (small.isDefined) {
+      val seedBudget = math.min(driverEdgeBudget, Long.MaxValue / 50) * 50 /
+        math.max(small.get.length, 1)
+      val seedRows = DriverGraph.collectWithin(seedD, seedBudget)
+      if (seedRows.isDefined)
+        return harmonicDriver(DriverGraph(small.get),
+          seedRows.get.map(_.getLong(0)), rounds, e.sparkSession)
     }
     var dist = seedD
       .select(col("seed").as("node"), col("seed"), lit(0L).as("d"))
@@ -569,37 +542,17 @@ object Graph {
       .orderBy("node")
   }
 
-  /** [[harmonicCentrality]]'s under-budget path: per-seed BFS over a
-    * CSR adjacency from ONE collect of the edge list. Unit-weight BFS
+  /** [[harmonicCentrality]]'s under-budget path: per-seed BFS over the
+    * CSR of the collected edge list. Unit-weight BFS
     * first-discovery distances are the same integers the frontier-delta
     * supersteps compute; the two roundings replicate Spark's `round`
     * (BigDecimal HALF_UP on the double) per element — both are pure
     * per-value functions, so parity is exact and order-free.
     */
-  private def harmonicDriver(e: DataFrame, seedD: DataFrame,
-                             rounds: Int): DataFrame = {
-    val sess = e.sparkSession
+  private def harmonicDriver(g: DriverGraph, seedVals: Array[Long],
+                             rounds: Int, sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val edgeRows = e.select(col("src"), col("dst")).collect()
-    val seedVals = seedD.collect().map(_.getLong(0))
-    if (edgeRows.isEmpty || seedVals.isEmpty)
-      return Seq.empty[(Long, Long, Double)]
-        .toDF("node", "n_seeds_reached", "harmonic")
-    val nodes = edgeRows
-      .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).distinct.sorted
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    val degree = new Array[Int](n)
-    edgeRows.foreach(r => degree(idx(r.getLong(0))) += 1)
-    val start = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { start(i + 1) = start(i) + degree(i); i += 1 }
-    val fill = start.clone()
-    val nbr = new Array[Int](edgeRows.length)
-    edgeRows.foreach { r =>
-      val s = idx(r.getLong(0))
-      nbr(fill(s)) = idx(r.getLong(1)); fill(s) += 1
-    }
+    val (n, start, nbr) = (g.n, g.start, g.nbr)
     def roundHalfUp(v: Double, scale: Int): java.math.BigDecimal =
       java.math.BigDecimal.valueOf(v)
         .setScale(scale, java.math.RoundingMode.HALF_UP)
@@ -610,7 +563,7 @@ object Graph {
     val sumH = new Array[Long](n)
     val distArr = Array.fill(n)(-1)
     val queue = new Array[Int](n)
-    for (sv <- seedVals; si <- idx.get(sv)) {
+    for (si <- seedVals.map(g.index) if si >= 0) {
       java.util.Arrays.fill(distArr, -1)
       distArr(si) = 0
       queue(0) = si
@@ -631,7 +584,7 @@ object Graph {
           }
         }
       }
-      i = 0
+      var i = 0
       while (i < n) {
         if (distArr(i) > 0) {
           cnt(i) += 1L
@@ -641,7 +594,7 @@ object Graph {
       }
     }
     (0 until n).filter(cnt(_) > 0L).map { i =>
-      (nodes(i), cnt(i),
+      (g.ids(i), cnt(i),
         roundHalfUp(sumH(i) / 1000000.0, 6).doubleValue)
     }.toDF("node", "n_seeds_reached", "harmonic").orderBy("node")
   }
@@ -668,22 +621,25 @@ object Graph {
     * one-row-per-node score vector + one keyed sum (map-side combined)
     * + one scalar total broadcast back — the Pregel shape; lineage
     * truncated per superstep.
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the distinct edge
+    * list; within it the same lattice recursion runs on the driver.
+    * Edges with a NULL endpoint are dropped on both paths.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int,
            checkpointDir: Option[String] = None,
-           driverEdgeBudget: Long = 2000000L): DataFrame = {
+           driverEdgeBudget: Long = DriverGraph.Budget): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       s"hits: iterations in [1, 20] (got $iterations)")
-    val e = Ckpt.cut(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct(), checkpointDir)
-    // cost-based fast path (the connectedComponents driverEdgeBudget
-    // posture): each superstep costs 2 half-steps of join + fold +
-    // scalar broadcast + checkpoint regardless of graph size; under
-    // the budget one collect + the exact lattice recursion in driver
-    // integer math replaces 6 jobs per iteration. Over-budget graphs
-    // keep the distributed loop; GraphSpec pins fast ≡ distributed.
-    if (e.count() <= driverEdgeBudget) return hitsDriver(e, iterations)
+    val e = Ckpt.cut(edgeList(edges, srcCol, dstCol).distinct(),
+      checkpointDir)
+    // under the budget the exact lattice recursion runs on the driver
+    // ([[DriverGraph]]) instead of 6 jobs per iteration (2 half-steps of
+    // join + fold + scalar broadcast + checkpoint)
+    val small = DriverGraph.collectWithin(e, driverEdgeBudget)
+    if (small.isDefined)
+      return hitsDriver(DriverGraph(small.get), iterations, e.sparkSession)
     val nodes = Ckpt.cut(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct(), checkpointDir)
@@ -722,33 +678,17 @@ object Graph {
       .orderBy("node")
   }
 
-  /** [[hits]]'s under-budget path: the identical lattice recursion from
-    * ONE collect of the checkpointed edge list. Every operation is the
-    * same exact integer as the distributed form — Long folds with
-    * `Math.addExact` (the ANSI-overflow contract), the L1 half-step as
-    * BigInt (2·raw·10⁹ + tot) div (2·tot) — so parity is bit-exact and
-    * order-free. GraphSpec pins fast ≡ distributed via
-    * `driverEdgeBudget = 0`.
+  /** [[hits]]'s under-budget path: the identical lattice recursion over
+    * the collected edge list. Every operation is the same exact integer
+    * as the distributed form — Long folds with `Math.addExact` (the
+    * ANSI-overflow contract), the L1 half-step as BigInt
+    * (2·raw·10⁹ + tot) div (2·tot) — so parity is bit-exact and
+    * order-free.
     */
-  private def hitsDriver(e: DataFrame, iterations: Int): DataFrame = {
-    val sess = e.sparkSession
+  private def hitsDriver(g: DriverGraph, iterations: Int,
+                         sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val edgeRows = e.select(col("src"), col("dst")).collect()
-    if (edgeRows.isEmpty)
-      return Seq.empty[(Long, Double, Double)]
-        .toDF("node", "authority", "hub")
-    val nodes = edgeRows
-      .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).distinct.sorted
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
-    val srcI = new Array[Int](edgeRows.length)
-    val dstI = new Array[Int](edgeRows.length)
-    var k = 0
-    while (k < edgeRows.length) {
-      srcI(k) = idx(edgeRows(k).getLong(0))
-      dstI(k) = idx(edgeRows(k).getLong(1))
-      k += 1
-    }
+    val (n, srcI, dstI) = (g.n, g.src, g.dst)
     def norm(raw: Array[Long]): Array[Long] = {
       var tot = 0L
       var i = 0
@@ -761,20 +701,20 @@ object Graph {
     var a = new Array[Long](n)
     for (_ <- 1 to iterations) {
       val ar = new Array[Long](n)
-      k = 0
-      while (k < edgeRows.length) {
+      var k = 0
+      while (k < srcI.length) {
         ar(dstI(k)) = Math.addExact(ar(dstI(k)), h(srcI(k))); k += 1
       }
       a = norm(ar)
       val hr = new Array[Long](n)
       k = 0
-      while (k < edgeRows.length) {
+      while (k < srcI.length) {
         hr(srcI(k)) = Math.addExact(hr(srcI(k)), a(dstI(k))); k += 1
       }
       h = norm(hr)
     }
     (0 until n).map { i =>
-      (nodes(i), ((a(i) * 2 + 1000L) / 2000L).toDouble / 1e6,
+      (g.ids(i), ((a(i) * 2 + 1000L) / 2000L).toDouble / 1e6,
         ((h(i) * 2 + 1000L) / 2000L).toDouble / 1e6)
     }.toDF("node", "authority", "hub").orderBy("node")
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -441,11 +441,15 @@ object Learn {
     * Plan per superstep: matchup-grain join against the strength
     * frame, one keyed fold, one 1-row total broadcast back — the
     * iterate-with-checkpoint shape of [[Clustering.kmeans]].
+    *
+    * `driverEdgeBudget`: the [[DriverGraph]] gate on the directed
+    * (winner, loser) cell table, the league's edges; within it the same
+    * MM loop runs on the driver.
     */
   def bradleyTerry(comparisons: DataFrame, winnerCol: String,
                    loserCol: String, iterations: Int = 4,
                    checkpointDir: Option[String] = None,
-                   driverCellBudget: Long = 2000000L): DataFrame = {
+                   driverEdgeBudget: Long = DriverGraph.Budget): DataFrame = {
     require(iterations >= 1 && iterations <= 12,
       s"bradleyTerry: iterations in [1, 12] (got $iterations)")
     // ONE matchup-grain pass: comparisons pre-aggregate to the DIRECTED
@@ -460,19 +464,12 @@ object Learn {
         .filter(col("__w") =!= col("__l"))
         .groupBy(col("__w"), col("__l")).agg(count(lit(1)).as("__nwl")),
       checkpointDir)
-    // Cost-based fast path (the connectedComponents driverEdgeBudget
-    // posture): the checkpointed matchup-CELL table is ≤ players² rows
-    // and data-bounded. Driver-memory envelope at the DEFAULT budget
-    // (r12 advice — the earlier "tens of MB" note undersold it): 2M
-    // collected Rows plus the boxed HashMap[(Long,Long),Long] and idx
-    // maps cost several hundred MB of driver heap near the boundary —
-    // sized against the bench driver's 8g heap; lower driverCellBudget
-    // when the driver is smaller. One collect + the exact MM loop in
-    // driver integer math replaces 4 distributed jobs per run plus the
-    // pairs/nodes/nComp folds. Over-budget leagues keep the distributed
-    // superstep loop below.
-    if (comps.count() <= driverCellBudget)
-      return bradleyTerryDriver(comps, iterations)
+    // under the budget the exact MM loop runs on the driver over the
+    // collected cells, the league's edges ([[DriverGraph]]), instead of
+    // 4 distributed jobs per run plus the pairs/nodes/nComp folds
+    val small = DriverGraph.collectWithin(comps, driverEdgeBudget)
+    if (small.isDefined)
+      return bradleyTerryDriver(small.get, iterations, comps.sparkSession)
     val pairs = Ckpt.cut(comps
       .select(col("__w").as("__i"), col("__l").as("__j"), col("__nwl"))
       .unionByName(comps.select(col("__l").as("__i"),
@@ -566,13 +563,11 @@ object Learn {
     * Long split-division with a BigInt fallback, both truncating
     * toward zero like decimal `div` on these positive operands — and
     * every fold is an exact integer sum (order-free). LearnSpec pins
-    * fast ≡ distributed (`driverCellBudget = 0` forces the loop).
+    * fast ≡ distributed (`driverEdgeBudget = 0` forces the loop).
     */
-  private def bradleyTerryDriver(comps: DataFrame,
-                                 iterations: Int): DataFrame = {
-    val sess = comps.sparkSession
+  private def bradleyTerryDriver(rows: Array[Row], iterations: Int,
+                                 sess: SparkSession): DataFrame = {
     import sess.implicits._
-    val rows = comps.select(col("__w"), col("__l"), col("__nwl")).collect()
     if (rows.isEmpty)
       return Seq.empty[(Long, Long, Long, Double, Long)]
         .toDF("player", "n_wins", "n_comparisons", "strength", "rank")

@@ -203,7 +203,7 @@ class LearnSpec extends SparkSpec {
   }
 
   test("bradleyTerry driver fast path ≡ distributed supersteps " +
-      "(driverCellBudget = 0 forces the loop) on a randomized league") {
+      "(driverEdgeBudget = 0 forces the loop) on a randomized league") {
     // deterministic pseudo-random schedule: 24 players, 400 matchups
     // with repeats, skewed toward low ids winning — exercises repeated
     // cells, uneven schedules, and all-losing players
@@ -217,7 +217,7 @@ class LearnSpec extends SparkSpec {
     val fast = Learn.bradleyTerry(games, "winner", "loser",
       iterations = 4).collect().toSeq
     val dist = Learn.bradleyTerry(games, "winner", "loser",
-      iterations = 4, driverCellBudget = 0L).collect().toSeq
+      iterations = 4, driverEdgeBudget = 0L).collect().toSeq
     assert(fast == dist)
     assert(fast.nonEmpty)
   }
