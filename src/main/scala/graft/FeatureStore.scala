@@ -85,22 +85,18 @@ class FeatureStore(@annotation.unused spark: SparkSession) {
     * `view__feature` columns, probe payload untouched.
     */
   def getHistoricalFeatures(entityDf: DataFrame, name: String,
-                            probeTs: String): DataFrame = {
-    val v = view(name)
-    val joined = Retrieval.asOfJoin(entityDf, v.source, v.entityCol,
-      probeTs, v.tsCol, v.ttl, v.features)
-    Retrieval.selectFeatureRefs(joined, v.name, v.features,
-      entityDf.columns.toSeq)
-  }
+                            probeTs: String): DataFrame =
+    getHistoricalFeaturesMulti(entityDf, Seq(name), probeTs)
 
   /** Point-in-time training frame across SEVERAL views in one call — the
     * reference API's multi-view feature list. The as-of joins CHAIN on
-    * the accumulating probe frame (one hash shuffle per view; the frame
-    * only ever carries probe columns + already-joined `view__feature`
-    * columns, never a view×view product). Views may key on different
-    * entity columns as long as the probe frame carries each one; feature
-    * column names must not collide with probe columns (same contract as
-    * the single-view call).
+    * the accumulating probe frame: one hash shuffle per view's features,
+    * while views on the same entity column reuse the probe frame's
+    * partitioning and order. The frame only ever carries probe columns +
+    * already-joined `view__feature` columns, never a view×view product.
+    * Views may key on different entity columns as long as the probe frame
+    * carries each one; feature column names must not collide with probe
+    * columns.
     */
   def getHistoricalFeaturesMulti(entityDf: DataFrame, names: Seq[String],
                                  probeTs: String): DataFrame =
@@ -117,7 +113,7 @@ class FeatureStore(@annotation.unused spark: SparkSession) {
     * order with every view's `view__feature` columns side by side.
     */
   def getOnlineFeaturesMulti(keys: DataFrame, names: Seq[String]): DataFrame = {
-    // req_idx leads, matching getOnlineFeatures' column contract
+    // req_idx leads the response columns
     val stamped = keys.select(
       monotonically_increasing_id().as("req_idx") +:
         keys.columns.map(col).toSeq: _*)
@@ -137,15 +133,8 @@ class FeatureStore(@annotation.unused spark: SparkSession) {
     * stamp and the frame is ordered by it — callers zip the response
     * against the request batch without re-sorting by key.
     */
-  def getOnlineFeatures(keys: DataFrame, name: String): DataFrame = {
-    val v = view(name)
-    val snap = snapshots.getOrElse(name, materialize(name))
-    val looked = Retrieval.pointLookupOrdered(keys, snap, v.entityCol)
-    Retrieval.selectFeatureRefs(looked, v.name, v.features,
-        "req_idx" +: keys.columns.toSeq)
-      .orderBy("req_idx") // serving batches are small; alignment sort here,
-      // never inside pointLookupOrdered (large probe sets zip by req_idx)
-  }
+  def getOnlineFeatures(keys: DataFrame, name: String): DataFrame =
+    getOnlineFeaturesMulti(keys, Seq(name))
 
   /** Registry freshness over every registered view. */
   def freshness(): DataFrame =

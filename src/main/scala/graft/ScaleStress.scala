@@ -905,10 +905,11 @@ object ScaleStress {
         .groupBy(col("user_id"), col("ts").as("fts"))
         .agg(max(col("value")).as("last_purchase_value")).localCheckpoint()
       val nProbes = probesA.count(); val nFeats = featsA.count()
-      val ttl = 7L * 86400L * 1000000L
+      val ttl = "INTERVAL 7 DAYS"
       val (tPlain, nPlain) = timeMin2 {
-        graft.ops.Retrieval.asOfJoinNative(probesA, featsA, "user_id",
-          "ts", "fts", ttl).queryExecution.toRdd.count()
+        graft.ops.Retrieval.asOfJoin(probesA, featsA, "user_id",
+          "ts", "fts", ttl, Seq("last_purchase_value"))
+          .queryExecution.toRdd.count()
       }
       for (t <- Seq("graft_stress_probes_bkt", "graft_stress_feats_bkt")) {
         spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -926,10 +927,10 @@ object ScaleStress {
         .sortBy("user_id", "fts").saveAsTable("graft_stress_feats_bkt")
       val tWrite = (System.nanoTime() - tw0) / 1e9
       val (tBkt, nBkt) = timeMin2 {
-        graft.ops.Retrieval.asOfJoinNative(
+        graft.ops.Retrieval.asOfJoin(
           spark.table("graft_stress_probes_bkt"),
           spark.table("graft_stress_feats_bkt"), "user_id", "ts", "fts",
-          ttl).queryExecution.toRdd.count()
+          ttl, Seq("last_purchase_value")).queryExecution.toRdd.count()
       }
       require(nPlain == nBkt,
         s"STRESS-ASOF row mismatch: plain $nPlain vs bucketed $nBkt")

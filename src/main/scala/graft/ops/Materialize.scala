@@ -54,7 +54,8 @@ object Materialize {
         .filter(col("__rn") === 1)
         .drop("__rn")
     } else {
-      val packed = struct((ts +: tiebreak +: rest.toSeq).map(c => col(s"`$c`")): _*)
+      // each column packed once: the tiebreak may be the ts column itself
+      val packed = struct((Seq(ts, tiebreak).distinct ++ rest).map(c => col(s"`$c`")): _*)
       history
         .groupBy(col(key))
         .agg(max(packed).as("__m"))
@@ -337,16 +338,15 @@ object Materialize {
       s"snapshotSeries: 1..1000 cutoffs (got ${cutoffs.size})")
     val cuts = array(cutoffs.map(c =>
       lit(c).cast("timestamp_ntz")): _*)
-    val packed = struct(
-      col(tsCol) +: col(tieCol) +: payloadCols.map(col): _*)
+    // each column packed once, the (ts, tie) prefix leading the order
+    val packedCols = (Seq(tsCol, tieCol) ++ payloadCols).distinct
     history
       .withColumn("cutoff", explode(cuts))
       .filter(col(tsCol) <= col("cutoff"))
       .groupBy(col(keyCol), col("cutoff"))
-      .agg(max(packed).as("__last"))
+      .agg(max(struct(packedCols.map(col): _*)).as("__last"))
       .select(col("cutoff") +: col(keyCol) +:
-        (Seq(tsCol, tieCol) ++ payloadCols).map(c =>
-          col(s"__last.$c").as(c)): _*)
+        packedCols.map(c => col(s"__last.$c").as(c)): _*)
       .orderBy("cutoff", keyCol)
   }
 
@@ -365,15 +365,14 @@ object Materialize {
   def applyChangelog(changelog: DataFrame, keyCol: String, tsCol: String,
                      tieCol: String, opCol: String, deleteOp: String,
                      payloadCols: Seq[String]): DataFrame = {
-    val packed = struct(
-      col(tsCol) +: col(tieCol) +: col(opCol) +: payloadCols.map(col): _*)
+    // each column packed once, the (ts, tie) prefix leading the order
+    val outCols = (Seq(tsCol, tieCol) ++ payloadCols).distinct
+    val packed = (Seq(tsCol, tieCol, opCol) ++ payloadCols).distinct
     changelog
       .groupBy(col(keyCol))
-      .agg(max(packed).as("__last"))
+      .agg(max(struct(packed.map(col): _*)).as("__last"))
       .filter(col(s"__last.$opCol") =!= deleteOp)
-      .select(col(keyCol) +:
-        (Seq(tsCol, tieCol) ++ payloadCols).map(c =>
-          col(s"__last.$c").as(c)): _*)
+      .select(col(keyCol) +: outCols.map(c => col(s"__last.$c").as(c)): _*)
       .orderBy(keyCol)
   }
 }

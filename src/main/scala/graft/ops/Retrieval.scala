@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, TimestampNTZType, TimestampType}
+import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
 
 /** Feature-retrieval joins (SURVEY.md §2.4, J1–J4) — the feature-store
   * crown jewels the reference delegates to Feast.
@@ -12,14 +16,12 @@ import org.apache.spark.sql.functions._
   * `feature_ts <= ts` and `feature_ts >= ts - ttl`, else NULLs (probe row
   * preserved).
   *
-  * Implementation is the union-and-window "piggyback" formulation
-  * (SURVEY.md §7.3#2), NOT a range join: probes and features are unioned,
-  * and a running `last(_, ignoreNulls)` over
-  * `partitionBy(key).orderBy(ts, isProbe)` carries the newest feature value
-  * forward onto each probe row; the TTL is applied afterwards as a
-  * projection. Cost: ONE hash shuffle on the entity key + per-key sort —
-  * identical shape to a windowed dedup, fully scalable. The naive
-  * `join(f.ts <= e.ts && f.ts >= e.ts - ttl)` degrades to
+  * It runs one operator, the sort-merge `graft.plans.AsOfJoinExec`, NOT a
+  * range join: both sides are hash-clustered on the entity key and sorted
+  * by (key, ts), then each partition is merged in one streaming pass that
+  * buffers one feature row per key. Cost: one hash shuffle per side (none
+  * over bucketed-sorted tables) — the shape of a sort-merge join. The
+  * naive `join(f.ts <= e.ts && f.ts >= e.ts - ttl)` degrades to
   * BroadcastNestedLoopJoin (a 100 TB cartesian death sentence); this never
   * does.
   */
@@ -27,90 +29,64 @@ object Retrieval {
 
   /** J1: point-in-time (as-of) join with TTL.
     *
+    * NULLs follow SQL three-valued logic: a probe with a NULL key or time
+    * keeps its row with NULL features; a feature row with a NULL key or
+    * time never matches.
+    *
     * @param probes   entity probes; columns `key`, `probeTs` + payload
     * @param features feature history; columns `key`, `featureTs` + feature cols;
     *                 must be unique per (key, featureTs) — pre-aggregate if not
-    *                 (ties on feature_ts would otherwise be order-dependent)
-    * @param ttl      lookback horizon, e.g. "INTERVAL 7 DAYS"
+    *                 (ties on feature_ts would otherwise be order-dependent);
+    *                 `key` has the same type on both sides, each time column
+    *                 is a `date`, `timestamp` or `timestamp_ntz`
+    * @param ttl      lookback horizon, a day-time interval such as
+    *                 "INTERVAL 7 DAYS"; a year-month interval has no fixed
+    *                 length and is rejected
     * @param featureCols feature value columns to attach
+    * @return every probe column, then `featureCols`, then `feature_ts`
     */
   def asOfJoin(probes: DataFrame, features: DataFrame, key: String,
                probeTs: String, featureTs: String, ttl: String,
                featureCols: Seq[String]): DataFrame = {
-    val ftsType = features.schema(featureTs).dataType
-    val probeSide = probes
-      .withColumn("__ts", col(probeTs))
-      .withColumn("__isProbe", lit(1))
-      .withColumn("__fts", lit(null).cast(ftsType))
-    val probeCols = probes.columns
-    // feature rows carry null payload for the probe columns and vice versa
-    val featureSide0 = features
-      .withColumn("__ts", col(featureTs))
-      .withColumn("__isProbe", lit(0))
-      .withColumn("__fts", col(featureTs))
-    val featureSide = probeCols.filterNot(c => c == key)
-      .foldLeft(featureSide0) { (df, c) =>
-        if (df.columns.contains(c)) df
-        else df.withColumn(c, lit(null).cast(probes.schema(c).dataType))
-      }
-    val probeFull = featureCols.foldLeft(probeSide) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(features.schema(c).dataType))
+    val ttlMicros = scala.util.Try(CatalystSqlParser.parseExpression(ttl)) match {
+      case scala.util.Success(Literal(micros: Long, _: DayTimeIntervalType)) => micros
+      case _ => throw new IllegalArgumentException(
+        s"asOfJoin: TTL must be a day-time interval, got '$ttl'")
     }
-    val unioned = probeFull.select(
-      (probeCols.filterNot(_ == key) ++ Seq(key, "__ts", "__isProbe", "__fts")
-        ++ featureCols).map(col): _*
-    ).unionByName(featureSide.select(
-      (probeCols.filterNot(_ == key) ++ Seq(key, "__ts", "__isProbe", "__fts")
-        ++ featureCols).map(col): _*
-    ))
-
-    // Feature rows sort BEFORE probes at equal ts => feature_ts == probe_ts
-    // is included (Feast boundary semantics: feature_ts <= event_ts).
-    val w = Window.partitionBy(col(key))
-      .orderBy(col("__ts").asc, col("__isProbe").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // Carry the newest feature ROW as one struct: per-column last(ignoreNulls)
-    // would backfill a NULL value in the newest row from an older row —
-    // fabricating a (value, feature_ts) pair that never existed. The struct
-    // is non-null whenever __fts is, so the newest row wins as a unit and
-    // its NULL fields stay NULL (matches DuckDB ASOF semantics).
-    val rowStruct = when(col("__fts").isNotNull,
-      struct(col("__fts").as("fts") +: featureCols.map(col): _*))
-    val carried = unioned
-      .withColumn("__lastRow", last(rowStruct, ignoreNulls = true).over(w))
-
-    val inTtl = col("__lastRow").isNotNull &&
-      col("__lastRow.fts") >= col("__ts") - expr(ttl)
-    val out = featureCols.foldLeft(carried.filter(col("__isProbe") === 1)) {
-      (df, c) => df.withColumn(c, when(inTtl, col(s"__lastRow.$c")))
-    }.withColumn("feature_ts", when(inTtl, col("__lastRow.fts")))
-    out.select((probeCols ++ featureCols :+ "feature_ts").map(col): _*)
-  }
-
-  /** J1 via the custom physical operator (`graft.plans.AsOfJoinExec`):
-    * same semantics as `asOfJoin` (proven equivalent in AsOfNativeSpec),
-    * planned as a co-partitioned sort-merge — demand clustering+ordering
-    * from Catalyst, stream-merge each partition. Output: all probe columns
-    * + all feature columns (nullable). Requires features unique per
-    * (key, featureTs), like `asOfJoin`.
-    */
-  def asOfJoinNative(probes: DataFrame, features: DataFrame, key: String,
-                     probeTs: String, featureTs: String,
-                     ttlMicros: Long): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
+    val pType = probes.schema(probeTs).dataType
+    val fType = features.schema(featureTs).dataType
+    val times = Seq(DateType, TimestampType, TimestampNTZType)
+    require(times.contains(pType) && times.contains(fType),
+      s"asOfJoin: $probeTs/$featureTs must be date or timestamp, got $pType/$fType")
+    require(probes.schema(key).dataType == features.schema(key).dataType,
+      s"asOfJoin: $key has different types on the probe and feature sides")
+    // the exec compares raw longs, so both times must reach it in one
+    // micros unit: a DATE (days) or a timestamp/timestamp_ntz mix is cast
+    // into a hidden join column; payload columns keep their types
+    val joinType = (pType, fType) match {
+      case (p, f) if p == f && p != DateType => None
+      case (TimestampNTZType | DateType, TimestampNTZType | DateType) =>
+        Some(TimestampNTZType)
+      case _ => Some(TimestampType)
+    }
+    val probeSide = joinType.fold(probes)(t =>
+      probes.withColumn("__asof_ts", col(probeTs).cast(t)))
+    // only (key, ts, featureCols) cross the exchange; NULL-keyed or
+    // NULL-timed feature rows can never match, so they never ship
+    val featureSide = features
+      .filter(col(key).isNotNull && col(featureTs).isNotNull)
+      .select((col(key).as("__asof_key") +: col(featureTs).as("feature_ts") +:
+        featureCols.map(col)) ++
+        joinType.map(t => col(featureTs).cast(t).as("__asof_fts")): _*)
     val spark = probes.sparkSession
-    GraftSqlBridge.injectStrategy(spark, graft.plans.AsOfJoinStrategy)
-    require(probes.columns.contains(key) && probes.columns.contains(probeTs),
-      s"probe side needs $key/$probeTs")
-    require(features.columns.contains(key) &&
-      features.columns.contains(featureTs),
-      s"feature side needs $key/$featureTs")
-    GraftSqlBridge.ofRows(spark, graft.plans.AsOfJoinPlan(
-      GraftSqlBridge.analyzedPlan(probes),
-      GraftSqlBridge.analyzedPlan(features),
-      key, probeTs, featureTs, ttlMicros))
+    GraftSqlBridge.injectStrategy(spark, AsOfJoinStrategy)
+    GraftSqlBridge.ofRows(spark, AsOfJoinPlan(
+        GraftSqlBridge.analyzedPlan(probeSide),
+        GraftSqlBridge.analyzedPlan(featureSide),
+        key, joinType.fold(probeTs)(_ => "__asof_ts"),
+        "__asof_key", joinType.fold("feature_ts")(_ => "__asof_fts"),
+        ttlMicros))
+      .select((probes.columns ++ featureCols :+ "feature_ts").map(col): _*)
   }
 
   /** J2: online point lookup — `get_online_features`
@@ -121,22 +97,6 @@ object Retrieval {
     */
   def pointLookup(keys: DataFrame, snapshot: DataFrame, key: String): DataFrame =
     keys.join(broadcast(snapshot), Seq(key), "left")
-
-  /** J2 with request-order alignment (SURVEY §3.3): the reference's serving
-    * path returns feature vectors aligned to the request batch's own order
-    * (`inference_service.py:107-135`). Each request row is stamped with
-    * `req_idx` BEFORE the join (monotonically_increasing_id preserves the
-    * input's partition/row order), the broadcast left join keeps misses as
-    * NULL rows, and the stamp survives any downstream exchange. NO sort is
-    * added here — a large probe set must never be globally sorted just for
-    * alignment (callers zip by `req_idx`); the serving facade
-    * (`FeatureStore.getOnlineFeatures`) adds the presentation `orderBy` on
-    * its small request batches.
-    */
-  def pointLookupOrdered(keys: DataFrame, snapshot: DataFrame,
-                         key: String): DataFrame =
-    keys.withColumn("req_idx", monotonically_increasing_id())
-      .join(broadcast(snapshot), Seq(key), "left")
 
   /** J3: feature-ref selection — `view:feature` refs rendered as
     * `view__feature` columns (`inference_service.py:20-31`).

@@ -550,9 +550,9 @@ private[graft] object OracleShared {
                  ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
         FROM orders) WHERE rn = 1)"""
 
-  /** One oracle for the native as-of join however it is planned —
+  /** One oracle for the as-of join however its inputs are laid out —
     * exchange-planned (q_asof_native) or bucketed-sorted zero-exchange
-    * fast path (s_bucketed_asof).
+    * (s_bucketed_asof); both run `Retrieval.asOfJoin`.
     */
   val asofNativeOracle: String = """
       WITH probes AS (

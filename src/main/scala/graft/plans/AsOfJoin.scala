@@ -8,37 +8,41 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** The as-of join as a first-class operator (SURVEY.md §7.2 escalation (c):
-  * custom `LogicalPlan` + `Strategy` + `SparkPlan`), alongside the
-  * union-and-window formulation in `graft.ops.Retrieval.asOfJoin`.
+/** The as-of join operator (SURVEY.md §7.2 escalation (c): custom
+  * `LogicalPlan` + `Strategy` + `SparkPlan`) behind
+  * `graft.ops.Retrieval.asOfJoin`, which builds every `AsOfJoinPlan`: it
+  * projects the feature side, drops feature rows with a NULL key or time,
+  * and brings both time columns to one micros type and the TTL to micros.
   *
   * Physical strategy: demand hash clustering on the entity key and
   * (key, ts) ordering from BOTH children — Catalyst's EnsureRequirements
   * inserts the exchanges/sorts — then a single streaming merge pass per
   * co-partition: probes and features advance monotonically, each probe
-  * joins the newest feature row with `fts <= ts` within TTL, else NULLs.
+  * joins the newest feature row with `fts <= ts` within TTL, else NULLs;
+  * a probe with a NULL key or time joins NULLs.
   *
-  * vs. the window formulation: no union row blow-up, no window state, one
-  * buffered feature row per key — O(|probes| + |features|) per partition
-  * with two shuffles total (one per side), the same cost shape as a
-  * sort-merge join. Equivalence is asserted in AsOfNativeSpec.
+  * No union row blow-up, no window state, one buffered feature row per
+  * key — O(|probes| + |features|) per partition with two shuffles total
+  * (one per side), the same cost shape as a sort-merge join; none at all
+  * over bucketed-sorted inputs (AsOfNativeSpec).
   */
 case class AsOfJoinPlan(
     left: LogicalPlan, right: LogicalPlan,
-    keyName: String, leftTsName: String, rightTsName: String,
+    leftKeyName: String, leftTsName: String,
+    rightKeyName: String, rightTsName: String,
     ttlMicros: Long) extends BinaryNode {
   // Join columns are stored by NAME and resolved against the children's
   // CURRENT outputs: analyzer/optimizer rules (DeduplicateRelations when
   // both sides share a source, column pruning) re-id attributes, and a
   // stored Attribute would go stale.
-  def leftKey: Attribute = left.output.find(_.name == keyName).get
-  def rightKey: Attribute = right.output.find(_.name == keyName).get
+  def leftKey: Attribute = left.output.find(_.name == leftKeyName).get
+  def rightKey: Attribute = right.output.find(_.name == rightKeyName).get
   def leftTs: Attribute = left.output.find(_.name == leftTsName).get
   def rightTs: Attribute = right.output.find(_.name == rightTsName).get
 
   override lazy val resolved: Boolean = childrenResolved &&
-    left.output.exists(_.name == keyName) &&
-    right.output.exists(_.name == keyName) &&
+    left.output.exists(_.name == leftKeyName) &&
+    right.output.exists(_.name == rightKeyName) &&
     left.output.exists(_.name == leftTsName) &&
     right.output.exists(_.name == rightTsName)
 
@@ -98,8 +102,8 @@ case class AsOfJoinExec(
 
     left.execute().zipPartitions(right.execute()) { (probes, feats) =>
       val fIter = feats.buffered
-      // newest feature row (copied) for the key currently being merged
-      var curKey: Any = null
+      // newest feature row (copied) at or before the last probe; it may
+      // belong to an earlier key, so a match re-checks its key
       var curFeature: InternalRow = null
       var curFeatureTs: Long = 0L
       val nullRight = new GenericInternalRow(rightWidth)
@@ -107,30 +111,27 @@ case class AsOfJoinExec(
       val project = UnsafeProjection.create(outAttrs, inAttrs)
 
       probes.map { p =>
-        val k = p.get(lKeyOrd, keyType)
-        val t = p.getLong(lTsOrd)
-        if (curKey == null || ordering.compare(curKey, k) != 0) {
-          // entering a new probe key: drop buffered feature if stale
-          if (curKey == null || ordering.compare(curKey, k) < 0) {
-            curFeature = null
+        // SQL three-valued logic: a probe with a NULL key or time matches
+        // nothing and leaves the merge state as it was (NULLs sort first)
+        val matched = !p.isNullAt(lKeyOrd) && !p.isNullAt(lTsOrd) && {
+          val k = p.get(lKeyOrd, keyType)
+          val t = p.getLong(lTsOrd)
+          // advance the feature side up to (k, t)
+          var advancing = true
+          while (advancing && fIter.hasNext) {
+            val f = fIter.head
+            val fk = f.get(rKeyOrd, keyType)
+            val cmp = ordering.compare(fk, k)
+            if (cmp < 0) { fIter.next() }
+            else if (cmp == 0 && f.getLong(rTsOrd) <= t) {
+              curFeature = fIter.next().copy()
+              curFeatureTs = curFeature.getLong(rTsOrd)
+            } else advancing = false
           }
-          curKey = k
+          curFeature != null &&
+            ordering.compare(curFeature.get(rKeyOrd, keyType), k) == 0 &&
+            curFeatureTs >= t - ttl
         }
-        // advance the feature side up to (k, t)
-        var advancing = true
-        while (advancing && fIter.hasNext) {
-          val f = fIter.head
-          val fk = f.get(rKeyOrd, keyType)
-          val cmp = ordering.compare(fk, k)
-          if (cmp < 0) { fIter.next() }
-          else if (cmp == 0 && f.getLong(rTsOrd) <= t) {
-            curFeature = fIter.next().copy()
-            curFeatureTs = curFeature.getLong(rTsOrd)
-          } else advancing = false
-        }
-        val matched = curFeature != null &&
-          ordering.compare(curFeature.get(rKeyOrd, keyType), k) == 0 &&
-          curFeatureTs >= t - ttl
         project(joined(p, if (matched) curFeature else nullRight))
       }
     }
@@ -146,7 +147,7 @@ case class AsOfJoinExec(
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p @ AsOfJoinPlan(l, r, _, _, _, ttl) =>
+    case p @ AsOfJoinPlan(l, r, _, _, _, _, ttl) =>
       AsOfJoinExec(planLater(l), planLater(r),
         p.leftKey, p.rightKey, p.leftTs, p.rightTs, ttl) :: Nil
     case _ => Nil

@@ -15,6 +15,22 @@ import Shared._
   */
 object CoreRegistry {
 
+  /** J1: each click gets the newest purchase value of its user within 7
+    * days. `q_asof_features` and `q_asof_native` both run it; the second
+    * name is kept from when the native operator was a separate path.
+    */
+  private val clickPurchaseAsOf: (SparkSession, String) => DataFrame = (s, dir) => {
+    val e = Tables.events(s, dir)
+    val probes = e.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val feats = e.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), col("ts").as("fts"))
+      .agg(max(col("value")).as("last_purchase_value"))
+    Retrieval.asOfJoin(probes, feats, "user_id", "ts", "fts",
+        "INTERVAL 7 DAYS", Seq("last_purchase_value"))
+      .orderBy("event_id")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §2.2 projections / scalar functions -------------------------------
     "p_parse_events" -> ((s, dir) =>
@@ -185,34 +201,8 @@ object CoreRegistry {
     }),
 
     // ---- §2.4 joins / point-in-time retrieval ------------------------------
-    "q_asof_features" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val probes = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val feats = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts").as("fts"))
-        .agg(max(col("value")).as("last_purchase_value"))
-      Retrieval.asOfJoin(probes, feats, "user_id", "ts", "fts",
-          "INTERVAL 7 DAYS", Seq("last_purchase_value"))
-        .orderBy("event_id")
-    }),
-    "q_asof_native" -> ((s, dir) => {
-      // J1 via the custom LogicalPlan/Strategy/SparkPlan operator — checked
-      // against the SAME DuckDB ASOF oracle as the window formulation
-      val e = Tables.events(s, dir)
-      val probes = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val feats = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts").as("fts"))
-        .agg(max(col("value")).as("last_purchase_value"))
-      Retrieval.asOfJoinNative(probes, feats, "user_id", "ts", "fts",
-          7L * 86400L * 1000000L)
-        .toDF("event_id", "user_id", "ts", "f_user", "feature_ts",
-          "last_purchase_value")
-        .select("event_id", "user_id", "ts", "last_purchase_value",
-          "feature_ts")
-        .orderBy("event_id")
-    }),
+    "q_asof_features" -> clickPurchaseAsOf,
+    "q_asof_native" -> clickPurchaseAsOf,
     "s_bucketed_asof" -> ((s, dir) => {
       // the zero-exchange/zero-sort as-of fast path as a registered query:
       // both sides land as bucketed-sorted tables on the join key, so
@@ -253,13 +243,9 @@ object CoreRegistry {
         .repartition(8, col("user_id"))
         .write.mode("overwrite").bucketBy(8, "user_id")
         .sortBy("user_id", "fts").saveAsTable("graft_asof_feats_bkt")
-      Retrieval.asOfJoinNative(s.table("graft_asof_probes_bkt"),
+      Retrieval.asOfJoin(s.table("graft_asof_probes_bkt"),
           s.table("graft_asof_feats_bkt"), "user_id", "ts", "fts",
-          7L * 86400L * 1000000L)
-        .toDF("event_id", "user_id", "ts", "f_user", "feature_ts",
-          "last_purchase_value")
-        .select("event_id", "user_id", "ts", "last_purchase_value",
-          "feature_ts")
+          "INTERVAL 7 DAYS", Seq("last_purchase_value"))
         .orderBy("event_id")
     }),
     "q_fs_historical" -> ((s, dir) => {

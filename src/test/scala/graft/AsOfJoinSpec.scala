@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.Retrieval
 
 /** J1 edge cases (SURVEY.md §7.3#2): TTL boundary inclusive, equal-timestamp
-  * feature included, no history → NULL probe preserved, newest wins.
+  * feature included, no history → NULL probe preserved, newest wins, NULL
+  * keys and times match nothing, DATE and mixed timestamp types.
   */
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -74,6 +75,76 @@ class AsOfJoinSpec extends SparkSpec {
       .as[(Long, Option[Double], Option[java.sql.Timestamp])].head()
     assert(out._2.isEmpty)
     assert(out._3.contains(ts("2024-01-05 00:00:00"))) // newest row matched
+  }
+
+  /** event_id → fval for probes `(event_id, user_id, s)` against features
+    * `(user_id, s, fval)`, both time strings cast to the given types.
+    */
+  private def asOfTyped(probes: Seq[(Long, Option[Long], Option[String])],
+                        pType: String,
+                        feats: Seq[(Option[Long], Option[String], Double)],
+                        fType: String) = {
+    val p = probes.toDF("event_id", "user_id", "s")
+      .selectExpr("event_id", "user_id", s"CAST(s AS $pType) AS ts")
+    val f = feats.toDF("user_id", "s", "fval")
+      .selectExpr("user_id", s"CAST(s AS $fType) AS fts", "fval")
+    val out = Retrieval.asOfJoin(p, f, "user_id", "ts", "fts",
+      "INTERVAL 7 DAYS", Seq("fval"))
+    assert(out.schema("feature_ts").dataType == f.schema("fts").dataType)
+    out.select("event_id", "fval").as[(Long, Option[Double])]
+      .collect().toMap
+  }
+
+  private val epoch = Some("1970-01-01 00:00:00")
+
+  test("a probe with a NULL key or time keeps its row with NULL features") {
+    // a NULL read as its raw 0 would match key 0 / the epoch feature
+    val got = asOfTyped(
+      Seq((301L, None, epoch), (302L, Some(1L), None),
+        (303L, Some(1L), epoch), (304L, Some(0L), epoch)), "timestamp",
+      Seq((Some(0L), epoch, 1.0), (Some(1L), epoch, 2.0)), "timestamp")
+    assert(got == Map(301L -> None, 302L -> None, 303L -> Some(2.0),
+      304L -> Some(1.0)))
+  }
+
+  test("a feature row with a NULL key or time never matches") {
+    val got = asOfTyped(
+      Seq((311L, None, Some("2024-01-06 00:00:00")),
+        (312L, Some(3L), Some("2024-01-06 00:00:00")),
+        (313L, Some(0L), Some("2024-01-06 00:00:00")),
+        (314L, Some(3L), Some("1970-01-02 00:00:00"))), "timestamp",
+      Seq((None, Some("2024-01-05 00:00:00"), 70.0), (Some(3L), None, 80.0)),
+      "timestamp")
+    assert(got == Map(311L -> None, 312L -> None, 313L -> None, 314L -> None))
+  }
+
+  test("DATE times: the TTL counts days, a feature older than it gives NULL") {
+    val got = asOfTyped(
+      Seq((321L, Some(1L), Some("2024-01-05")),  // a year after: NULL
+        (322L, Some(1L), Some("2023-01-08")),    // exactly ts - ttl
+        (323L, Some(1L), Some("2023-01-09"))),   // one day past the TTL
+      "date", Seq((Some(1L), Some("2023-01-01"), 5.0)), "date")
+    assert(got == Map(321L -> None, 322L -> Some(5.0), 323L -> None))
+  }
+
+  test("mixed timestamp / timestamp_ntz times join on one time line") {
+    val got = asOfTyped(
+      Seq((331L, Some(1L), Some("2024-01-06 00:00:00")),
+        (332L, Some(1L), Some("2024-01-14 00:00:00")),  // 01-07 == ts - ttl
+        (333L, Some(1L), Some("2024-01-14 00:00:01"))), // 01-07 too old
+      "timestamp_ntz",
+      Seq((Some(1L), Some("2024-01-05 00:00:00"), 50.0),
+        (Some(1L), Some("2024-01-07 00:00:00"), 70.0)), "timestamp")
+    assert(got == Map(331L -> Some(50.0), 332L -> Some(70.0), 333L -> None))
+  }
+
+  test("a year-month TTL has no fixed length and is rejected") {
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.asOfJoin(Seq((341L, 1L, ts("2024-01-06 00:00:00")))
+          .toDF("event_id", "user_id", "ts"), features, "user_id", "ts",
+        "fts", "INTERVAL 1 MONTH", Seq("fval"))
+    }
+    assert(e.getMessage.contains("INTERVAL 1 MONTH"))
   }
 
   test("futureLabels: horizon boundary inclusive, per-key isolation, " +

@@ -2,15 +2,13 @@ package graft
 
 import graft.ops.Retrieval
 
-/** The custom physical as-of join (AsOfJoinExec) is equivalent to the
-  * union+window formulation, including NULL semantics and TTL boundaries,
-  * and its plan contains the custom exec node.
+/** The plan shape of the as-of join: it runs the custom AsOfJoinExec node,
+  * and over bucketed-sorted inputs it needs no exchange and no sort.
   */
 class AsOfNativeSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-  private val day = 86400L * 1000000L
 
   private val features = Seq(
     (1L, ts("2024-01-01 00:00:00"), 10.0),
@@ -27,27 +25,16 @@ class AsOfNativeSpec extends SparkSpec {
     (105L, 99L, ts("2024-01-06 00:00:00")) // no history
   ).toDF("event_id", "user_id", "ts")
 
-  private def run(p: org.apache.spark.sql.DataFrame) =
-    Retrieval.asOfJoinNative(p, features, "user_id", "ts", "fts", 7L * day)
-      .toDF("event_id", "user_id", "ts", "f_user", "fts", "fval")
-      .select("event_id", "fval")
-      .as[(Long, Option[Double])].collect().toMap
+  private def asOf(p: org.apache.spark.sql.DataFrame,
+                   f: org.apache.spark.sql.DataFrame) =
+    Retrieval.asOfJoin(p, f, "user_id", "ts", "fts", "INTERVAL 7 DAYS",
+      Seq("fval"))
 
-  test("native as-of matches the window formulation on all edge cases") {
-    val got = run(probes)
-    val want = Retrieval.asOfJoin(probes, features, "user_id", "ts", "fts",
-        "INTERVAL 7 DAYS", Seq("fval"))
-      .select("event_id", "fval").as[(Long, Option[Double])].collect().toMap
-    assert(got == want)
-    assert(got(100L).contains(50.0) && got(101L).contains(50.0))
-    assert(got(102L).contains(30.0))
-    assert(got(103L).isEmpty && got(104L).isEmpty && got(105L).isEmpty)
-  }
+  private def fvals(df: org.apache.spark.sql.DataFrame) =
+    df.select("event_id", "fval").as[(Long, Option[Double])].collect().toMap
 
   test("plan contains the custom AsOfJoinExec node") {
-    val df = Retrieval.asOfJoinNative(probes, features, "user_id", "ts",
-      "fts", 7L * day)
-    val hasExec = df.queryExecution.sparkPlan.collect {
+    val hasExec = asOf(probes, features).queryExecution.sparkPlan.collect {
       case e: graft.plans.AsOfJoinExec => e
     }.nonEmpty
     assert(hasExec)
@@ -63,61 +50,29 @@ class AsOfNativeSpec extends SparkSpec {
     features.repartition(4, $"user_id").write.mode("overwrite")
       .bucketBy(4, "user_id").sortBy("user_id", "fts").saveAsTable("asof_f_b")
     try {
-      val df = Retrieval.asOfJoinNative(spark.table("asof_p_b"),
-        spark.table("asof_f_b"), "user_id", "ts", "fts", 7L * day)
+      val df = asOf(spark.table("asof_p_b"), spark.table("asof_f_b"))
       // audit the POST-EnsureRequirements plan: requirement-driven
       // exchanges/sorts are only inserted during preparation, so the
       // pre-preparation sparkPlan would be vacuously exchange-free. AQE
-      // off so executedPlan is a plain walkable tree, and the legacy
-      // bucketedTableScan.outputOrdering conf on so the scan EXPOSES the
-      // per-bucket sortBy order (off by default since Spark 3.0 — without
-      // it the merge's ordering requirement forces a per-partition Sort
-      // even over single-file sorted buckets).
+      // off so executedPlan is a plain walkable tree; the session exposes
+      // the per-bucket sortBy order (LocalSession's
+      // bucketedTableScan.outputOrdering — without it the merge's ordering
+      // requirement forces a per-partition Sort even over single-file
+      // sorted buckets).
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       var shuffles = 0; var sorts = 0
       try df.queryExecution.executedPlan.foreach {
         case _: ShuffleExchangeExec => shuffles += 1
         case _: SortExec => sorts += 1
         case _ =>
-      } finally {
-        spark.conf.unset("spark.sql.adaptive.enabled")
-        spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-      }
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
       assert(shuffles == 0, "bucketed as-of join must not shuffle")
       assert(sorts == 0, "sorted buckets must satisfy the merge's ordering")
       // and the fast path computes the same result
-      val got = df.toDF("event_id", "user_id", "ts", "f_user", "fts", "fval")
-        .select("event_id", "fval")
-        .as[(Long, Option[Double])].collect().toMap
-      assert(got == run(probes))
+      assert(fvals(df) == fvals(asOf(probes, features)))
     } finally {
       spark.sql("DROP TABLE IF EXISTS asof_p_b")
       spark.sql("DROP TABLE IF EXISTS asof_f_b")
-    }
-  }
-
-  test("native as-of matches window formulation on randomized data") {
-    val r = new java.util.Random(77)
-    (1 to 10).foreach { _ =>
-      val feats = Seq.fill(r.nextInt(30))(
-          (1L + r.nextInt(5), r.nextInt(2000).toLong, r.nextInt(100).toDouble))
-        .groupBy(f => (f._1, f._2))
-        .map { case ((k, t), fs) => (k, t, fs.map(_._3).max) }.toSeq
-      val prbs = Seq.tabulate(1 + r.nextInt(30))(i =>
-        (i.toLong, 1L + r.nextInt(5), r.nextInt(2000).toLong))
-      val fDf = feats.toDF("user_id", "l", "fval")
-        .selectExpr("user_id", "timestamp_micros(l) AS fts", "fval")
-      val pDf = prbs.toDF("event_id", "user_id", "l")
-        .selectExpr("event_id", "user_id", "timestamp_micros(l) AS ts")
-      val native = Retrieval.asOfJoinNative(pDf, fDf, "user_id", "ts", "fts", 500L)
-        .toDF("event_id", "user_id", "ts", "f_user", "fts", "fval")
-        .select("event_id", "fval")
-        .as[(Long, Option[Double])].collect().toMap
-      val window = Retrieval.asOfJoin(pDf, fDf, "user_id", "ts", "fts",
-          "INTERVAL '0.0005' SECOND", Seq("fval"))
-        .select("event_id", "fval").as[(Long, Option[Double])].collect().toMap
-      assert(native == window)
     }
   }
 }

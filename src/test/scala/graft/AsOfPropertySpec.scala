@@ -3,29 +3,56 @@ package graft
 import graft.ops.Retrieval
 import org.apache.spark.sql.functions._
 
-/** Property: the union+window as-of join equals a brute-force per-probe
-  * scan of the feature history, for randomized feature/probe sets — the
-  * crown-jewel operator proven against an executable spec, not examples.
-  * (Seeded java.util.Random generation: deterministic across runs.)
+/** Property: the as-of join equals a brute-force per-probe scan of the
+  * feature history, for randomized feature/probe sets with ~5 % NULL keys
+  * and times — the crown-jewel operator proven against an executable
+  * spec, not examples. (Seeded java.util.Random generation: deterministic
+  * across runs.)
   */
 class AsOfPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private val ttlMicros = 1000L
+  private val ttl = "INTERVAL '0.001' SECOND"
 
-  private def bruteForce(feats: Seq[(Long, Long, Double)],
-                         probes: Seq[(Long, Long, Long)]): Map[Long, Option[Double]] =
+  /** Features are (key, ts, value), probes (id, key, ts); a NULL key or
+    * time equals nothing (SQL three-valued logic), so such a probe gets
+    * NULL and such a feature row is never picked.
+    */
+  private def bruteForce(feats: Seq[(Option[Long], Option[Long], Double)],
+                         probes: Seq[(Long, Option[Long], Option[Long])]): Map[Long, Option[Double]] =
     probes.map { case (pid, k, ts) =>
-      val eligible = feats.filter(f =>
-        f._1 == k && f._2 <= ts && f._2 >= ts - ttlMicros)
-      val best =
-        if (eligible.isEmpty) None
-        else {
-          val maxTs = eligible.map(_._2).max
-          Some(eligible.filter(_._2 == maxTs).map(_._3).max)
-        }
-      pid -> best
+      val eligible = feats.collect {
+        case (Some(fk), Some(ft), v) if k.contains(fk) &&
+            ts.exists(t => ft <= t && ft >= t - ttlMicros) => (ft, v)
+      }
+      pid -> (if (eligible.isEmpty) None else Some(eligible.max._2))
     }.toMap
+
+  /** ~5 % NULLs. */
+  private def orNull[A](r: java.util.Random)(a: => A): Option[A] =
+    if (r.nextInt(20) == 0) None else Some(a)
+
+  /** Operator precondition: unique (key, ts) on the feature side — dedup
+    * keeping the max value (the documented pre-aggregation).
+    */
+  private def uniqueFeats(raw: Seq[(Option[Long], Option[Long], Double)]) =
+    raw.groupBy(f => (f._1, f._2))
+      .map { case ((k, t), fs) => (k, t, fs.map(_._3).max) }.toSeq
+
+  private def featDf(feats: Seq[(Option[Long], Option[Long], Double)]) =
+    feats.toDF("user_id", "l", "fval")
+      .selectExpr("user_id", "timestamp_micros(l) AS fts", "fval")
+
+  private def probeDf(probes: Seq[(Long, Option[Long], Option[Long])]) =
+    probes.toDF("probe_id", "user_id", "l")
+      .selectExpr("probe_id", "user_id", "timestamp_micros(l) AS ts")
+
+  private def asOf(p: org.apache.spark.sql.DataFrame,
+                   f: org.apache.spark.sql.DataFrame) =
+    Retrieval.asOfJoin(p, f, "user_id", "ts", "fts", ttl, Seq("fval"))
+      .select("probe_id", "fval")
+      .as[(Long, Option[Double])].collect().toMap
 
   test("intervalJoin equals brute-force containment for random intervals, " +
       "points, and bin widths (30 random datasets)") {
@@ -67,41 +94,30 @@ class AsOfPropertySpec extends SparkSpec {
     (1 to 40).foreach { round =>
       val nf = r.nextInt(25)
       val np = 1 + r.nextInt(25)
-      // operator precondition: unique (key, ts) on the feature side —
-      // generate then dedup keeping max value (the documented pre-agg)
-      val rawFeats = Seq.fill(nf)(
-        (1L + r.nextInt(4), r.nextInt(3000).toLong,
-          math.rint((1 + 8 * r.nextDouble()) * 100) / 100))
-      val feats = rawFeats.groupBy(f => (f._1, f._2))
-        .map { case ((k, t), fs) => (k, t, fs.map(_._3).max) }.toSeq
+      val feats = uniqueFeats(Seq.fill(nf)(
+        (orNull(r)(1L + r.nextInt(4)), orNull(r)(r.nextInt(3000).toLong),
+          math.rint((1 + 8 * r.nextDouble()) * 100) / 100)))
       val probes = Seq.tabulate(np)(i =>
-        (i.toLong, 1L + r.nextInt(4), r.nextInt(3000).toLong))
-
-      val featDf = feats.toDF("user_id", "ftsl", "fval")
-        .selectExpr("user_id", "timestamp_micros(ftsl) AS fts", "fval")
-      val probeDf = probes.toDF("probe_id", "user_id", "tsl")
-        .selectExpr("probe_id", "user_id", "timestamp_micros(tsl) AS ts")
-      val got = Retrieval.asOfJoin(probeDf, featDf, "user_id", "ts", "fts",
-          "INTERVAL '0.001' SECOND", Seq("fval"))
-        .select("probe_id", "fval")
-        .as[(Long, Option[Double])].collect().toMap
-      assert(got == bruteForce(feats, probes), s"round $round: $feats $probes")
+        (i.toLong, orNull(r)(1L + r.nextInt(4)),
+          orNull(r)(r.nextInt(3000).toLong)))
+      assert(asOf(probeDf(probes), featDf(feats)) == bruteForce(feats, probes),
+        s"round $round: $feats $probes")
     }
   }
 
-  /** Boundary-chaos triple agreement: timestamps are drawn ON and ±1–2 µs
+  /** Boundary-chaos agreement: timestamps are drawn ON and ±1–2 µs
     * AROUND the hazardous instants — the 1970 epoch itself, the epoch±TTL
     * window edges, a pre-epoch (negative-micros) instant, and a real DST
     * transition (2021-03-14 07:00 UTC, US spring-forward) — so microsecond
     * ties (probe==feature ts, probe==probe, window-edge exact hits) occur
-    * constantly rather than by luck. All three production formulations of
-    * J1 (union+window, native AsOfJoinExec, native over bucketed-sorted
-    * tables) must agree with the brute-force executable spec on every
-    * probe. TTL boundary is inclusive (fts >= ts - ttl), the fts == ts tie
-    * includes the feature (Feast semantics) — exactly what an off-by-one
-    * in any of the three implementations would break at these instants.
+    * constantly rather than by luck. The as-of join, planned with
+    * exchanges and over bucketed-sorted tables, must agree with the
+    * brute-force executable spec on every probe. TTL boundary is inclusive
+    * (fts >= ts - ttl), the fts == ts tie includes the feature (Feast
+    * semantics) — exactly what an off-by-one would break at these
+    * instants. A NULL time read as its raw 0 would sit on the epoch.
     */
-  test("epoch/DST boundary chaos: window ≡ native ≡ bucketed ≡ brute force " +
+  test("epoch/DST boundary chaos: plain ≡ bucketed ≡ brute force " +
        "(≥1000 probes)") {
     val r = new java.util.Random(20260813)
     val dstEdge = 1615705200000000L // 2021-03-14T07:00:00Z in micros
@@ -115,56 +131,34 @@ class AsOfPropertySpec extends SparkSpec {
       val shift = if (r.nextInt(4) == 0) (r.nextInt(3) - 1) * ttlMicros else 0L
       base + jitter + shift
     }
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     var totalProbes = 0
     try {
       (1 to 10).foreach { round =>
         val nf = 20 + r.nextInt(20)
         val np = 110
-        val rawFeats = Seq.fill(nf)(
-          (1L + r.nextInt(3), chaosTs(), (r.nextInt(900) + 100).toDouble))
-        // operator precondition: unique (key, fts) — dedup keeping max value
-        val feats = rawFeats.groupBy(f => (f._1, f._2))
-          .map { case ((k, t), fs) => (k, t, fs.map(_._3).max) }.toSeq
-        val probes = Seq.tabulate(np)(i => (i.toLong, 1L + r.nextInt(3), chaosTs()))
+        val feats = uniqueFeats(Seq.fill(nf)(
+          (orNull(r)(1L + r.nextInt(3)), orNull(r)(chaosTs()),
+            (r.nextInt(900) + 100).toDouble)))
+        val probes = Seq.tabulate(np)(i =>
+          (i.toLong, orNull(r)(1L + r.nextInt(3)), orNull(r)(chaosTs())))
         val want = bruteForce(feats, probes)
 
-        val featDf = feats.toDF("user_id", "l", "fval")
-          .selectExpr("user_id", "timestamp_micros(l) AS fts", "fval")
-        val probeDf = probes.toDF("probe_id", "user_id", "l")
-          .selectExpr("probe_id", "user_id", "timestamp_micros(l) AS ts")
+        assert(asOf(probeDf(probes), featDf(feats)) == want,
+          s"round $round plain: $feats $probes")
 
-        val window = Retrieval.asOfJoin(probeDf, featDf, "user_id", "ts",
-            "fts", "INTERVAL '0.001' SECOND", Seq("fval"))
-          .select("probe_id", "fval")
-          .as[(Long, Option[Double])].collect().toMap
-        assert(window == want, s"round $round window: $feats $probes")
-
-        val native = Retrieval.asOfJoinNative(probeDf, featDf, "user_id",
-            "ts", "fts", ttlMicros)
-          .toDF("probe_id", "user_id", "ts", "f_user", "f_fts", "fval")
-          .select("probe_id", "fval")
-          .as[(Long, Option[Double])].collect().toMap
-        assert(native == want, s"round $round native: $feats $probes")
-
-        probeDf.repartition(4, col("user_id")).write.mode("overwrite")
+        probeDf(probes).repartition(4, col("user_id")).write.mode("overwrite")
           .bucketBy(4, "user_id").sortBy("user_id", "ts")
           .saveAsTable("asof_chaos_p")
-        featDf.repartition(4, col("user_id")).write.mode("overwrite")
+        featDf(feats).repartition(4, col("user_id")).write.mode("overwrite")
           .bucketBy(4, "user_id").sortBy("user_id", "fts")
           .saveAsTable("asof_chaos_f")
-        val bucketed = Retrieval.asOfJoinNative(spark.table("asof_chaos_p"),
-            spark.table("asof_chaos_f"), "user_id", "ts", "fts", ttlMicros)
-          .toDF("probe_id", "user_id", "ts", "f_user", "f_fts", "fval")
-          .select("probe_id", "fval")
-          .as[(Long, Option[Double])].collect().toMap
-        assert(bucketed == want, s"round $round bucketed: $feats $probes")
+        assert(asOf(spark.table("asof_chaos_p"), spark.table("asof_chaos_f"))
+          == want, s"round $round bucketed: $feats $probes")
 
         totalProbes += np
       }
       assert(totalProbes >= 1000, s"only $totalProbes probes exercised")
     } finally {
-      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.sql("DROP TABLE IF EXISTS asof_chaos_p")
       spark.sql("DROP TABLE IF EXISTS asof_chaos_f")
     }

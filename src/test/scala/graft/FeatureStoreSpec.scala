@@ -123,6 +123,33 @@ class FeatureStoreSpec extends SparkSpec {
     assert(multi.count() == 200)
   }
 
+  test("a second view on the same entity adds exactly one exchange: the " +
+      "probe frame is not re-shuffled (AQE off)") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val e = Tables.events(spark, sfDir)
+    val probes = e.filter($"event_type" === "click")
+      .select($"event_id", $"user_id", $"ts")
+    // plain scans as sources, so a view's own plan adds no exchange of
+    // its own: what is counted is the join's shuffles
+    def rows(t: String, out: String) = e.filter($"event_type" === t)
+      .select($"user_id", $"ts".as("fts"), $"value".as(out))
+    val fs = new FeatureStore(spark)
+    fs.applyView(FeatureView("purchases", rows("purchase", "pv"),
+      "user_id", "fts", "pv", Seq("pv")))
+    fs.applyView(FeatureView("pageviews", rows("view", "vv"),
+      "user_id", "fts", "vv", Seq("vv")))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    def exchanges(names: Seq[String]) =
+      fs.getHistoricalFeaturesMulti(probes, names, "ts")
+        .queryExecution.executedPlan.collect {
+          case x: ShuffleExchangeExec => x
+        }.size
+    try {
+      val one = exchanges(Seq("purchases"))
+      assert(exchanges(Seq("purchases", "pageviews")) == one + 1)
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
+
   test("multi-view online read aligns to request order with all views") {
     val e = Tables.events(spark, sfDir)
     def latest(t: String, out: String) = e.filter($"event_type" === t)

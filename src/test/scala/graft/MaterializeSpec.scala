@@ -32,6 +32,31 @@ class MaterializeSpec extends SparkSpec {
     assert(snap.columns.contains("attrs"))
   }
 
+  test("tiebreak = ts column: FeatureStore.materialize, snapshotSeries and " +
+      "applyChangelog pack it once") {
+    val fs = new FeatureStore(spark)
+    fs.applyView(FeatureView("hist", history, "user_id", "fts", "fts",
+      Seq("fval")))
+    val snap = fs.materialize("hist")
+    assert(snap.columns.toSeq == Seq("user_id", "fts", "fval"))
+    // unique (user_id, fts) rows: the newest ts alone picks the row
+    val unique = history.filter($"seq" =!= 101L)
+    val direct = Materialize.latestPerKey(unique, "user_id", "fts", "fts")
+      .select("user_id", "fval").as[(Long, Double)].collect().toMap
+    assert(direct == Map(1L -> 30.0, 2L -> 40.0))
+    val series = Materialize.snapshotSeries(unique, "user_id", "fts", "fts",
+        Seq("2024-01-31 00:00:00"), Seq("fts", "fval"))
+    assert(series.columns.toSeq == Seq("cutoff", "user_id", "fts", "fval"))
+    assert(series.select("user_id", "fval").as[(Long, Double)].collect()
+      .toMap == direct)
+    val log = unique.withColumn("op", lit("upsert"))
+    val applied = Materialize.applyChangelog(log, "user_id", "fts", "fts",
+        "op", "delete", Seq("fts", "fval"))
+    assert(applied.columns.toSeq == Seq("user_id", "fts", "fval"))
+    assert(applied.select("user_id", "fval").as[(Long, Double)].collect()
+      .toMap == direct)
+  }
+
   test("point lookup preserves missing entities as NULL rows (J2)") {
     val keys = Seq(1L, 2L, 99L).toDF("user_id")
     val snap = Materialize.latestPerKey(history, "user_id", "fts", "seq")
