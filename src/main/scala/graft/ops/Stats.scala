@@ -3889,8 +3889,8 @@ object Stats {
     * formula term for term:
     * `(higher − pos) · v_lo + (pos − lower) · v_hi` at
     * `pos = p · (n − 1)` — StatsSpec pins exact equality against the
-    * builtin on real columns. Nulls are skipped like the builtin; the
-    * caller filters NaN (order parity for NaN is not defined here).
+    * builtin on real and generated columns (ties, ±0.0, NaN, ±Inf).
+    * Nulls are skipped like the builtin.
     *
     * Returns one row: `n` (long) and `out` (array<double>, one element
     * per prob, in the given order). Empty input → one row with n = 0
@@ -3901,9 +3901,17 @@ object Stats {
     require(probs.nonEmpty && probs.size <= 32 &&
       probs.forall(p => p >= 0.0 && p <= 1.0),
       s"exactQuantiles: 1..32 probs in [0, 1] (got $probs)")
+    // −0.0 stays its own value, ordered before 0.0 — what the builtin's
+    // hash buffer does up to a few hundred distinct values (beyond that
+    // its ±0.0 order follows the table layout). A grouping key is
+    // normalized to 0.0, so the sign rides in a second key (`__nz`) and
+    // is put back after the aggregation.
     val counts = df.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-      .groupBy(col("__v")).agg(count(lit(1)).as("__c"))
+      .groupBy(col("__v"), (col("__v") === 0.0 &&
+        col("__v").cast("string").startsWith("-")).as("__nz"))
+      .agg(count(lit(1)).as("__c"))
+      .withColumn("__v", when(col("__nz"), lit(-0.0)).otherwise(col("__v")))
     // Distributed running sum (round 13): the old global
     // `Window.orderBy(__v)` moved EVERY distinct value to one task — fine
     // at a bounded-bin grain, a one-task sort on a mostly-distinct
@@ -3917,7 +3925,7 @@ object Stats {
     // window left runs over ONE ROW PER SHUFFLE PARTITION (bounded by
     // cluster config, not data — the documented bounded-global-window
     // class).
-    val ranged = counts.repartitionByRange(col("__v"))
+    val ranged = counts.repartitionByRange(col("__v"), col("__nz").desc)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint(false)
     val offs = ranged.groupBy(col("__pid"))
@@ -3928,7 +3936,8 @@ object Stats {
       .select(col("__pid"), col("__off"))
     val cum = ranged
       .withColumn("__lend", sum(col("__c")).over(
-        Window.partitionBy(col("__pid")).orderBy(col("__v"))
+        Window.partitionBy(col("__pid"))
+          .orderBy(col("__v"), col("__nz").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .join(broadcast(offs), Seq("__pid"))
       .withColumn("__end", col("__lend") + col("__off"))
@@ -3950,8 +3959,11 @@ object Stats {
     val outElems = probs.zipWithIndex.map { case (p, i) =>
       val pos = lit(p) * (col("__n") - lit(1L)).cast("double")
       val lo = floor(pos); val hi = ceil(pos)
-      when(lo === hi, col(s"__lo$i"))
-        .otherwise((hi - pos) * col(s"__lo$i") + (pos - lo) * col(s"__hi$i"))
+      val (vLo, vHi) = (col(s"__lo$i"), col(s"__hi$i"))
+      // the builtin skips interpolation when the two keys are equal as
+      // numbers (−0.0 and 0.0 included, NaN never)
+      when(lo === hi || (vLo === vHi && !isnan(vLo)), vLo)
+        .otherwise((hi - pos) * vLo + (pos - lo) * vHi)
     }
     f.select(col("__n").as("n"),
       when(col("__n") > 0, array(outElems: _*)).as(out))

@@ -204,13 +204,6 @@ object KvStore {
       spark.sparkContext.parallelize(out.toSeq, 1), schema)
   }
 
-  /** Online point lookup: append the stored features to a bounded request
-    * frame, preserving request order and rows (missing entities surface
-    * NULL features — the coverage-probe contract). The request set is the
-    * serving batch (human/API-scale by construction, like
-    * [[graft.ops.Retrieval.pointLookup]]'s probe side); each key is one
-    * store `get`, the Redis MGET shape.
-    */
   /** The serving-service primitive: raw store-layer batch read (get +
     * decode, NO Spark plan) — what an online inference service calls per
     * request (the reference serves Feast get_online_features → Redis this
@@ -234,6 +227,13 @@ object KvStore {
     }
   }
 
+  /** Online point lookup: append the stored features to a bounded request
+    * frame, preserving request order and rows (missing entities surface
+    * NULL features — the coverage-probe contract). The request set is the
+    * serving batch (human/API-scale by construction, like
+    * [[graft.ops.Retrieval.pointLookup]]'s probe side); each key is one
+    * store `get`, the Redis MGET shape.
+    */
   def pointLookup(requests: DataFrame, path: String,
                   keyCol: String): DataFrame = {
     val spark = requests.sparkSession

@@ -714,7 +714,9 @@ object Pipeline {
     * [[graft.ops.Drift.psi]]'s reference deciles); a batch over the
     * threshold is QUARANTINED wholesale (written to its own store for
     * forensics, never admitted), and every batch leaves a one-row audit
-    * record (n, psi, verdict). Batch-level, not row-level, deliberately:
+    * record (n, psi, verdict). NULL and NaN values are not scored (as in
+    * `Drift.psi`) but count in `n_rows`; a batch with no scorable value
+    * is quarantined. Batch-level, not row-level, deliberately:
     * distribution shift is a property of the batch, and row-level
     * clipping would silently reshape the distribution instead of
     * flagging it.
@@ -847,30 +849,35 @@ object Pipeline {
     val spark = batch.sparkSession
     import spark.implicits._
     val bins = refShares.length
-    val binOf = edges.zipWithIndex
-      .map { case (e, _) => when(col(valCol) > e, 1).otherwise(0) }
-      .reduce(_ + _)
+    val v = col(valCol)
+    // NULL and NaN are not scored (Drift.cleanSamples' rule): they fall in
+    // a NULL bin, which matches no grid bin but still counts as a row
+    val binOf = when(v.isNotNull && !isnan(v),
+      edges.map(e => when(v > e, 1).otherwise(0)).reduce(_ + _))
     val counts = batch.select(binOf.as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n"))
     // densify over the full grid: a missing bin is q = 0, and the
     // epsilon-free convention (p>0 AND q>0 contribute) then skips it —
     // identical to Drift.psi
     val grid = (0 until bins).map(i => (i, refShares(i))).toDF("bin", "p")
-    val scored = grid.join(counts, Seq("bin"), "left")
+    val scored = grid.join(counts, Seq("bin"), "full")
       .withColumn("n", coalesce(col("n"), lit(0L)))
     val tot = org.apache.spark.sql.expressions.Window.partitionBy()
     val psiRow = scored
-      .withColumn("q", when(sum(col("n")).over(tot) > 0,
-        col("n").cast("double") / sum(col("n")).over(tot)).otherwise(0.0))
+      .withColumn("__scored",
+        sum(when(col("p").isNotNull, col("n"))).over(tot))
+      .withColumn("q", when(col("__scored") > 0,
+        col("n").cast("double") / col("__scored")).otherwise(0.0))
       .withColumn("contribution",
         when(col("p") > 0 && col("q") > 0,
           (col("p") - col("q")) * log(col("p") / col("q"))).otherwise(0.0))
       .agg(round(sum(col("contribution")), 6).as("psi"),
-        sum(col("n")).as("n_rows"))
+        sum(col("n")).as("n_rows"), max(col("__scored")).as("n_scored"))
       .head()
     val psi = psiRow.getDouble(0)
     val nRows = psiRow.getLong(1)
-    val admitted = nRows > 0 && psi <= threshold
+    // a batch with no scorable value is quarantined wholesale
+    val admitted = psiRow.getLong(2) > 0 && psi <= threshold
     val prior =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

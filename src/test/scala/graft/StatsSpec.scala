@@ -2278,4 +2278,31 @@ class StatsSpec extends SparkSpec {
       Seq.empty[java.lang.Double].toDF("v"), "v", Seq(0.5)).head()
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
   }
+
+  test("exactQuantiles ≡ builtin percentile on generated multisets " +
+      "(ties, ±0.0, NULL, NaN, ±Inf; raw bits)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val pool: Seq[java.lang.Double] = Seq[java.lang.Double](-0.0, 0.0,
+      -0.0, 0.0, -1.0, -2.5, 0.1, 3.5, 7.25, null, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val gen = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf(pool)))
+    val cases = Seq[Seq[java.lang.Double]](Nil, Seq(-0.0), Seq(0.1),
+      Seq.fill(5)(-0.0), Seq(null, null),
+      Seq(-0.0, -0.0, 0.0, 1.0, -1.0).map(Double.box)) ++
+      (1 to 24).map(i =>
+        gen.pureApply(Gen.Parameters.default, Seed(9100L + i)))
+    val probs = Seq(0.0, 1.0 / 3, 0.25, 0.5, 2.0 / 3, 0.999, 1.0)
+    val pArr = probs.map(p => s"${p}D").mkString(", ")
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    cases.foreach { vals =>
+      val df = vals.toDF("v")
+      val b = df.agg(expr(s"percentile(v, array($pArr))")).head()
+      val m = Stats.exactQuantiles(df, "v", probs).head()
+      assert(m.getLong(0) == vals.count(_ != null), vals)
+      if (b.isNullAt(0)) assert(m.isNullAt(1), vals)
+      else assert(bits(m.getSeq[Double](1)) == bits(b.getSeq[Double](0)),
+        s"$vals: ${m.getSeq[Double](1)} != ${b.getSeq[Double](0)}")
+    }
+  }
 }

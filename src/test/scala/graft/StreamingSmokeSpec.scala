@@ -684,6 +684,36 @@ class StreamingSmokeSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("drift gate scores only clean values: NULL/NaN rows are counted, " +
+      "not binned; a batch with nothing to score is quarantined whole") {
+    val edges = Array(10.0, 20.0, 30.0)
+    val shares = Array(0.25, 0.25, 0.25, 0.25)
+    // two values per quarter bin: PSI 0 against the uniform reference
+    val inBand: Seq[java.lang.Double] =
+      Seq(5.0, 15.0, 25.0, 35.0, 6.0, 16.0, 26.0, 36.0).map(Double.box)
+    val nulls = Seq.fill[java.lang.Double](4)(null)
+    val nans = Seq.fill[java.lang.Double](4)(Double.NaN)
+    val batches = Seq(inBand, inBand ++ nulls, inBand ++ nans, nulls ++ nans)
+    val root = java.nio.file.Files.createTempDirectory("graft_dgc_").toString
+    batches.zipWithIndex.foreach { case (vs, b) =>
+      Pipeline.ingestDriftGateBatch(
+        vs.zipWithIndex.map { case (v, i) => (b * 100L + i, v) }
+          .toDF("id", "v"),
+        b.toLong, "v", edges, shares, threshold = 0.2, root + "/admit",
+        root + "/quar", root + "/audit")
+    }
+    val audit = spark.read.parquet(root + "/audit")
+      .select($"ingest_batch", $"n_rows", $"psi", $"admitted")
+      .as[(Long, Long, Double, Boolean)].collect().sortBy(_._1)
+    assert(audit.toSeq == Seq((0L, 8L, 0.0, true), (1L, 12L, 0.0, true),
+      (2L, 12L, 0.0, true), (3L, 8L, 0.0, false)))
+    def ids(store: String) = spark.read.parquet(root + store)
+      .select($"id").as[Long].collect().toSet
+    assert(ids("/admit") == (0 until 3).flatMap(b =>
+      batches(b).indices.map(b * 100L + _)).toSet)
+    assert(ids("/quar") == (0 until 8).map(300L + _).toSet)
+  }
+
   test("vocabulary gate: reference-shaped batch admitted, alien-token " +
       "batch quarantined; kill/resume replays the same verdicts") {
     implicit val sqlCtx = spark.sqlContext

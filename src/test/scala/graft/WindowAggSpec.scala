@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops.{Parse, WindowAgg}
 
@@ -8,6 +9,9 @@ class WindowAggSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val parsed = Parse.parseEvents(Tables.events(spark, sfDir))
+  // (event_id, user_id, event_type, value, k, ts_parsed)
+  private type Ev = (Long, Long, String, Option[Double], Option[Long],
+    java.time.LocalDateTime)
 
   test("hourly feature counts reconcile with raw event counts") {
     val agg = WindowAgg.hourlyFeatures(parsed)
@@ -65,6 +69,66 @@ class WindowAggSpec extends SparkSpec {
         ev, "user_id", "ts", windowDays = 2)
       .select("day", "wau_ok").as[(java.sql.Date, Boolean)].collect()
     assert(chk.length == 3 && chk.forall(_._2))
+  }
+
+  test("hourlyPartials one-scan keyed fold ≡ per-batch calls on generated " +
+      "events (NULL k/value, hour boundaries, one user, empty), before " +
+      "and after merge + finalize") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val h0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val hourMicros = 3600L * 1000000L
+    // values are quarter units, so every double sum is exact in any order
+    def gen(users: Int, onBoundary: Boolean): Gen[Seq[Ev]] = {
+      val micros =
+        if (onBoundary) Gen.const(0L)
+        else Gen.frequency(1 -> Gen.const(0L), 1 -> Gen.const(hourMicros - 1),
+          4 -> Gen.choose(0L, hourMicros - 1))
+      val ev = for {
+        u <- Gen.choose(1L, users.toLong)
+        h <- Gen.choose(0L, 5L)
+        m <- micros
+        t <- Gen.oneOf("click", "view", "purchase", "signup", "error")
+        v <- Gen.option(Gen.choose(-400, 4000).map(_ / 4.0))
+        k <- Gen.option(Gen.choose(0L, 20L))
+      } yield (u, h0.plusNanos((h * hourMicros + m) * 1000L), t, v, k)
+      Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, ev)).map(_.zipWithIndex
+        .map { case ((u, ts, t, v, k), i) => (i.toLong, u, t, v, k, ts) })
+    }
+    def sample(g: Gen[Seq[Ev]], seed: Long) =
+      g.pureApply(Gen.Parameters.default, Seed(seed))
+    val cases = Seq("empty" -> Seq.empty[Ev],
+        "one user" -> sample(gen(1, onBoundary = false), 5200L),
+        "hour boundaries" -> sample(gen(3, onBoundary = true), 5201L)) ++
+      (1 to 6).map(i => s"generated $i" -> sample(gen(4, false), 5210L + i))
+    val batches = 3
+    val nonSketch = Seq("user_id", "window_start", "window_end",
+      "total_events", "click_count", "view_count", "purchase_count",
+      "signup_count", "error_count", "revenue_sum", "view_value_sum",
+      "view_value_cnt", "primary_k_min").map(col) :+
+      hll_sketch_estimate(col("k_sketch")).as("k_est")
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[Column]) =
+      df.select(cols: _*).collect().toSet
+    cases.foreach { case (name, evs) =>
+      val df = evs.toDF("event_id", "user_id", "event_type", "value", "k",
+        "ts_parsed")
+      val keyed = WindowAgg.hourlyPartials(df,
+        (col("event_id") % batches).as("__batch"))
+      val perBatch = (0 until batches).map(b =>
+        WindowAgg.hourlyPartials(df.filter(col("event_id") % batches === b))
+          .withColumn("__batch", lit(b.toLong)))
+      assert(rows(keyed, nonSketch :+ col("__batch")) ==
+        perBatch.flatMap(rows(_, nonSketch :+ col("__batch"))).toSet, name)
+      val fromKeyed = WindowAgg.finalizeHourly(
+        WindowAgg.mergeHourlyPartials(keyed.drop("__batch")))
+      val fromBatches = WindowAgg.finalizeHourly(
+        WindowAgg.mergeHourlyPartials(perBatch.map(_.drop("__batch")): _*))
+      val all = fromKeyed.columns.toSeq.map(col)
+      assert(rows(fromKeyed, all) == rows(fromBatches, all), name)
+      assert(fromKeyed.count() ==
+        evs.map(e => (e._2, e._6.withMinute(0).withSecond(0).withNano(0)))
+          .distinct.size, name)
+    }
   }
 
   test("incremental flagship partials: merge of split halves equals the " +
