@@ -556,22 +556,30 @@ object ScaleStress {
     // round-9 checkpoint posture: localCheckpoint pins every truncated
     // frame in executor storage (data-proportional, not fault-tolerant);
     // the reliable checkpoint trades one disk write/read per superstep
-    // for ~zero pinned memory. Pinned storage is the readout.
-    leg("ckpt9") { k =>
-      val edgesK = shifted(Tables.lineitem(spark, Dir).select(
-          col("l_orderkey").as("src"), col("l_suppkey").as("dst")),
-        k, pin = false)("src" -> 100000000L, "dst" -> 1000000L)
-      for (mode <- Seq("local", "reliable")) {
-        val dir = if (mode == "reliable") Some("/tmp/graft-ckpt9") else None
-        val (t, nOut) = timed(Graph.pageRank(edgesK, "src", "dst",
-          iterations = 5, checkpointDir = dir))
-        val pinned = spark.sparkContext.getRDDStorageInfo
-          .map(_.memSize).sum
-        println(f"STRESS-CKPT9 k=$k mode=$mode t=$t%.2f nodes=$nOut " +
-          f"storage_pinned_mb=${pinned / 1e6}%.1f")
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-      }
+    // for ~zero pinned memory. Pinned storage is the readout. The
+    // reliable checkpoints go to a fresh directory, deleted when the leg
+    // ends.
+    Leg("ckpt9") { (ks, _) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_ckpt9_")
+        .toString
+      spark.sparkContext.setCheckpointDir(root)
+      try for (k <- ks) {
+        val edgesK = shifted(Tables.lineitem(spark, Dir).select(
+            col("l_orderkey").as("src"), col("l_suppkey").as("dst")),
+          k, pin = false)("src" -> 100000000L, "dst" -> 1000000L)
+        for (mode <- Seq("local", "reliable")) {
+          val dir = if (mode == "reliable") Some(root) else None
+          val (t, nOut) = timed(Graph.pageRank(edgesK, "src", "dst",
+            iterations = 5, checkpointDir = dir))
+          val pinned = spark.sparkContext.getRDDStorageInfo
+            .map(_.memSize).sum
+          println(f"STRESS-CKPT9 k=$k mode=$mode t=$t%.2f nodes=$nOut " +
+            f"storage_pinned_mb=${pinned / 1e6}%.1f")
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = true))
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(root))
     },
     // round-8 text pipeline: span corruption, Naive Bayes train+score and
     // the curation funnel over suffixed replicas (per-copy vocab disjoint,

@@ -213,11 +213,7 @@ object CoreRegistry {
       // the exchange-planned form (layout changes, semantics do not);
       // PLANS.md carries the exchange-free plan.
       val e = Tables.events(s, dir)
-      // bucket sort metadata is only exposed to planning under this conf
-      // (off by default since Spark 3.0 because it lists files at plan
-      // time); without it the merge's ordering requirement re-sorts each
-      // bucket. Left set: it is behavior-neutral beyond planning cost.
-      s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      // the sort-free plan needs session conf bucketedTableScan.outputOrdering
       // a fresh session's in-memory catalog doesn't know about a previous
       // run's managed-table LOCATION — drop both the entry and the files
       for (t <- Seq("graft_asof_probes_bkt", "graft_asof_feats_bkt")) {

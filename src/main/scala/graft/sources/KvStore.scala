@@ -96,6 +96,18 @@ object KvStore {
       case "L" => "L" + r.getLong(i)
     }
 
+  private val TagType: Map[String, DataType] =
+    Map("D" -> DoubleType, "S" -> StringType, "L" -> LongType)
+
+  /** The stored (feature name, tag) pairs, in upsert order; fails with
+    * `missing` when the store has no schema record. */
+  private def featureSpec(db: RocksDB, missing: => String): Seq[(String, String)] = {
+    val rec = db.get(SchemaKey)
+    require(rec != null, missing)
+    new String(rec, "UTF-8").split(Sep).toSeq
+      .map { s => val Array(n, t) = s.split(':'); (n, t) }
+  }
+
   private def decodeField(f: String): Any =
     if (f == "N") null
     else f.charAt(0) match {
@@ -168,16 +180,9 @@ object KvStore {
     */
   def snapshot(spark: SparkSession, path: String): DataFrame = {
     val db = open(path)
-    val schemaRec = db.get(SchemaKey)
-    require(schemaRec != null, s"KvStore.snapshot: $path has no schema " +
+    val featSpec = featureSpec(db, s"KvStore.snapshot: $path has no schema " +
       "record (store never written?)")
-    val featSpec = new String(schemaRec, "UTF-8").split(Sep)
-      .map { s => val Array(n, t) = s.split(':'); (n, t) }
-    val featFields = featSpec.map { case (n, t) =>
-      StructField(n, t match {
-        case "D" => DoubleType; case "S" => StringType; case "L" => LongType
-      })
-    }
+    val featFields = featSpec.map { case (n, t) => StructField(n, TagType(t)) }
     val schema = StructType(
       StructField("entity_id", StringType, nullable = false) +:
       StructField("feature_ts", TimestampNTZType, nullable = false) +:
@@ -214,9 +219,8 @@ object KvStore {
     */
   def getBatch(path: String, keys: Seq[String]): Seq[Seq[Any]] = {
     val db = open(path)
-    val schemaRec = db.get(SchemaKey)
-    require(schemaRec != null, s"KvStore.getBatch: $path has no schema")
-    val nFields = new String(schemaRec, "UTF-8").split(Sep).length
+    val nFields = featureSpec(db, s"KvStore.getBatch: $path has no schema")
+      .length
     keys.map { k =>
       val v = db.get(k.getBytes("UTF-8"))
       if (v == null) Seq.fill[Any](nFields)(null)
@@ -238,17 +242,15 @@ object KvStore {
                   keyCol: String): DataFrame = {
     val spark = requests.sparkSession
     val db = open(path)
-    val schemaRec = db.get(SchemaKey)
-    require(schemaRec != null, s"KvStore.pointLookup: $path has no schema")
-    val featSpec = new String(schemaRec, "UTF-8").split(Sep)
-      .map { s => val Array(n, t) = s.split(':'); (n, t) }
+    val featSpec =
+      featureSpec(db, s"KvStore.pointLookup: $path has no schema")
     val reqRows = requests.collect()
     val ki = requests.schema.fieldIndex(keyCol)
     val rows = reqRows.map { r =>
       val v = if (r.isNullAt(ki)) null
         else db.get(String.valueOf(r.get(ki)).getBytes("UTF-8"))
       val feats: Seq[Any] =
-        if (v == null) featSpec.toSeq.map(_ => null)
+        if (v == null) featSpec.map(_ => null)
         else {
           val parts = new String(v, "UTF-8").split(Sep)
           featSpec.indices.map(i => decodeField(parts(i + 2)))
@@ -256,9 +258,7 @@ object KvStore {
       Row.fromSeq(r.toSeq ++ feats)
     }
     val schema = StructType(requests.schema.fields ++ featSpec.map {
-      case (n, t) => StructField(n, t match {
-        case "D" => DoubleType; case "S" => StringType; case "L" => LongType
-      })
+      case (n, t) => StructField(n, TagType(t))
     })
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq, 1), schema)
@@ -272,10 +272,7 @@ object KvStore {
   def streamingSink(features: DataFrame, path: String, checkpoint: String,
                     keyCol: String, tsCol: String, tiebreakCol: String,
                     featureCols: Seq[String]): DataStreamWriter[Row] =
-    features.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertLatest(batch, path, keyCol, tsCol, tiebreakCol, featureCols)
-      }
+    graft.streaming.Pipeline.foldSink(features, checkpoint) { (batch, _) =>
+      upsertLatest(batch, path, keyCol, tsCol, tiebreakCol, featureCols)
+    }
 }

@@ -13,8 +13,66 @@ import org.apache.spark.sql.Row
   * exact distincts become HLL sketches, everything else is the same
   * expression). Batch ≡ stream for closed windows is asserted in the
   * MemoryStream smoke spec.
+  *
+  * Every `foreachBatch` sink here (and `KvStore.streamingSink`) is
+  * [[foldSink]] around a public one-batch fold (`ingest*Batch`,
+  * [[upsertSnapshot]], `KvStore.upsertLatest`), which callers can also
+  * drive directly, without a trigger clock.
+  *
+  * The epoch-store contract, shared by the histogram, flagship, near-dup,
+  * semantic, span, drift and vocab folds:
+  *   - every store is partitioned by `ingest_batch`, the `foreachBatch`
+  *     epoch id, and written only by [[writeEpoch]];
+  *   - each write is a dynamic partition overwrite, set on the write
+  *     itself, so it replaces its own epoch and leaves every other epoch
+  *     (and the session conf) alone;
+  *   - a probe reads only the other epochs ([[otherEpochs]]), so a
+  *     replayed micro-batch never meets its first attempt's output.
+  * A replay therefore re-derives the same verdicts into the same
+  * partitions, whatever point the first attempt crashed at.
   */
 object Pipeline {
+
+  /** The one sink skeleton: append mode, checkpointed at `checkpoint`,
+    * each micro-batch handed to `fold` with its epoch id. */
+  private[graft] def foldSink(df: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(fold)
+
+  /** Write `df` as epoch `batchId` of the store at `path`, replacing that
+    * epoch only (a per-write dynamic overwrite). */
+  private def writeEpoch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("ingest_batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch")
+      .parquet(path)
+
+  /** The store at `path` minus epoch `batchId`, projected to `empty`'s
+    * columns; `empty` itself while the store does not exist yet. */
+  private def otherEpochs(spark: SparkSession, path: String, batchId: Long,
+                          empty: DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(path)
+        .filter(col("ingest_batch") =!= batchId)
+        .select(empty.columns.map(col): _*)
+    else empty
+  }
+
+  /** The gates' tail: a non-empty batch goes to the admit or the
+    * quarantine store, then the one-row `audit` record to `auditPath`. */
+  private def routeAndAudit(batch: DataFrame, batchId: Long, nRows: Long,
+                            admitted: Boolean, admitPath: String,
+                            quarantinePath: String, audit: DataFrame,
+                            auditPath: String): Unit = {
+    if (nRows > 0)
+      writeEpoch(batch, batchId, if (admitted) admitPath else quarantinePath)
+    writeEpoch(audit, batchId, auditPath)
+  }
 
   /** A1: event-time watermark bounding state (15 min in the reference,
     * `clickstream_aggregation.py:129`).
@@ -107,12 +165,9 @@ object Pipeline {
   def onlineStoreSink(features: DataFrame, storePath: String,
                       checkpoint: String, keyCol: String, tsCol: String,
                       tiebreakCol: String): DataStreamWriter[Row] =
-    features.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertSnapshot(batch, storePath, keyCol, tsCol, tiebreakCol)
-      }
+    foldSink(features, checkpoint) { (batch, _) =>
+      upsertSnapshot(batch, storePath, keyCol, tsCol, tiebreakCol)
+    }
 
   /** The reference platform's core loop (`feature_store_materialization
     * .py:214-239`: offline aggregate → latest-per-key → online store,
@@ -129,22 +184,14 @@ object Pipeline {
     */
   def materializeLoopSink(events: DataFrame, storePath: String,
                           checkpoint: String): DataStreamWriter[Row] =
-    streamingFeatures(events).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.KvStore.upsertLatest(batch, storePath, "user_id",
-          "window_end", "window_start",
-          Seq("total_events", "click_count", "unique_k_approx",
-            "total_revenue"))
-      }
+    graft.sources.KvStore.streamingSink(streamingFeatures(events), storePath,
+      checkpoint, "user_id", "window_end", "window_start",
+      Seq("total_events", "click_count", "unique_k_approx", "total_revenue"))
 
   /** Streaming maintenance of the mergeable histogram store
     * ([[graft.ops.Sketches.dailyHistogramStore]]): each micro-batch's
-    * per-(day, bin) counts land in an `ingest_batch`-partitioned parquet
-    * store via dynamic partition overwrite, so a REPLAYED micro-batch
-    * overwrites its own epoch instead of double-counting — the additive-
-    * aggregate analogue of the near-dup store's epoch discipline. The
+    * per-(day, bin) counts land in its own epoch of an epoch store (see
+    * [[Pipeline]]), so a replayed micro-batch cannot double-count. The
     * read side ([[histogramStore]]) sums across epochs; quantile readouts
     * then run [[graft.ops.Sketches.rollupQuantiles]] over it. Net effect:
     * a live stream keeps a KB-sized structure from which any period's
@@ -154,33 +201,14 @@ object Pipeline {
                          lo: Double, hi: Double, nBins: Int,
                          storePath: String,
                          checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestHistogramBatch(batch, batchId, tsCol, valCol, lo, hi, nBins,
-          storePath)
-      }
+    foldSink(events, checkpoint)(ingestHistogramBatch(_, _, tsCol, valCol,
+      lo, hi, nBins, storePath))
 
   def ingestHistogramBatch(batch: DataFrame, batchId: Long, tsCol: String,
                            valCol: String, lo: Double, hi: Double,
-                           nBins: Int, storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try graft.ops.Sketches
-      .dailyHistogramStore(batch, tsCol, valCol, lo, hi, nBins)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(storePath)
-    finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+                           nBins: Int, storePath: String): Unit =
+    writeEpoch(graft.ops.Sketches.dailyHistogramStore(batch, tsCol, valCol,
+      lo, hi, nBins), batchId, storePath)
 
   /** Read side of [[histogramStoreSink]]: fold the epoch partitions to the
     * canonical (day, bin, cnt) store. */
@@ -192,9 +220,8 @@ object Pipeline {
   /** Streaming leg of the flagship aggregate-table architecture: each
     * micro-batch of PARSED events folds to its mergeable hourly partials
     * ([[graft.ops.WindowAgg.hourlyPartials]] — sums/counts/mins + HLL
-    * sketch) and lands in an `ingest_batch` epoch partition via dynamic
-    * overwrite, so a replayed batch overwrites its own epoch instead of
-    * double-counting (same discipline as [[histogramStoreSink]]). The
+    * sketch) and lands in its own epoch of an epoch store (see
+    * [[Pipeline]]), so a replayed batch cannot double-count. The
     * read side merges epochs and finalizes — the LIVE flagship table
     * without ever re-aggregating raw history, and without streaming-
     * aggregation state: watermark bookkeeping is traded for idempotent
@@ -203,30 +230,11 @@ object Pipeline {
     */
   def flagshipPartialsSink(parsedEvents: DataFrame, storePath: String,
                            checkpoint: String): DataStreamWriter[Row] =
-    parsedEvents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestFlagshipBatch(batch, batchId, storePath)
-      }
+    foldSink(parsedEvents, checkpoint)(ingestFlagshipBatch(_, _, storePath))
 
   def ingestFlagshipBatch(batch: DataFrame, batchId: Long,
-                          storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try graft.ops.WindowAgg.hourlyPartials(batch)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(storePath)
-    finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+                          storePath: String): Unit =
+    writeEpoch(graft.ops.WindowAgg.hourlyPartials(batch), batchId, storePath)
 
   /** Read side of [[flagshipPartialsSink]]: merge all epochs' partials
     * and finalize into the flagship serving schema. */
@@ -257,18 +265,15 @@ object Pipeline {
                               tsCol: String, tiebreakCol: String,
                               viewName: String, jdbcUrl: String,
                               table: String = "feature_freshness"): DataStreamWriter[Row] =
-    features.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertSnapshot(batch, storePath, keyCol, tsCol, tiebreakCol)
-        val snap = batch.sparkSession.read.parquet(storePath)
-          .withColumn("view_name", lit(viewName))
-          .withColumn("ts_us", unix_micros(col(tsCol).cast("timestamp")))
-        graft.sources.JdbcRegistry.publishFreshness(
-          snap, "view_name", "ts_us", tiebreakCol, jdbcUrl, table)
-        ()
-      }
+    foldSink(features, checkpoint) { (batch, _) =>
+      upsertSnapshot(batch, storePath, keyCol, tsCol, tiebreakCol)
+      val snap = batch.sparkSession.read.parquet(storePath)
+        .withColumn("view_name", lit(viewName))
+        .withColumn("ts_us", unix_micros(col(tsCol).cast("timestamp")))
+      graft.sources.JdbcRegistry.publishFreshness(
+        snap, "view_name", "ts_us", tiebreakCol, jdbcUrl, table)
+      ()
+    }
 
   /** One fold of [[onlineStoreSink]]: merge a batch into the snapshot at
     * `storePath` keeping the newest row per key, then swap via
@@ -313,77 +318,36 @@ object Pipeline {
     * is the streaming form of the training-data ingest front door: what
     * reaches the corpus is exactly what the batch near-dup run would have
     * kept (the equivalence DedupSpec proves for the batch rule carries
-    * over batch-by-batch).
-    *
-    * Crash-safety is partition idempotence rather than fold idempotence:
-    * both stores are partitioned by `ingest_batch` (the foreachBatch epoch
-    * id) and written with dynamic partition overwrite, so a replayed
-    * micro-batch overwrites ITS OWN partition instead of double-appending;
-    * the probe reads the store MINUS the current epoch's partition, so a
-    * replay never collides with its first attempt's output (which would
-    * mark every replayed doc a duplicate of itself). Any crash point
-    * therefore re-derives identical verdicts and identical partitions.
+    * over batch-by-batch). Both stores are epoch stores (see
+    * [[Pipeline]]).
     */
   def nearDupIngestSink(docs: DataFrame, idCol: String, textCol: String,
                         sigPath: String, corpusPath: String,
                         checkpoint: String, n: Int = 3, numHashes: Int = 16,
                         bands: Int = 4,
                         threshold: Double = 0.5): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestNearDupBatch(batch, batchId, idCol, textCol, sigPath,
-          corpusPath, n, numHashes, bands, threshold)
-      }
+    foldSink(docs, checkpoint)(ingestNearDupBatch(_, _, idCol, textCol,
+      sigPath, corpusPath, n, numHashes, bands, threshold))
 
-  /** One fold of [[nearDupIngestSink]]: probe, admit, append — replay-safe
-    * via the current epoch's partition being excluded from the probe and
-    * overwritten (not appended) by the writes.
-    */
+  /** One fold of [[nearDupIngestSink]]: probe, admit, write this epoch. */
   def ingestNearDupBatch(batch: DataFrame, batchId: Long, idCol: String,
                          textCol: String, sigPath: String,
                          corpusPath: String, n: Int, numHashes: Int,
                          bands: Int, threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(sigPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // empty frame with the signature schema doubles as the first-batch seen
     val emptySigs = graft.ops.Dedup.minHashSignatures(
       batch.limit(0), idCol, textCol, n, numHashes)
-    val seen =
-      if (fs.exists(new Path(sigPath)))
-        spark.read.parquet(sigPath)
-          .filter(col("ingest_batch") =!= batchId)
-          .select(emptySigs.columns.map(col): _*)
-      else emptySigs
+    val seen = otherEpochs(batch.sparkSession, sigPath, batchId, emptySigs)
     val verdicts = graft.ops.Dedup.minHashNearDupsIncremental(
       seen, batch, idCol, textCol, n, numHashes, bands, threshold)
     val admitted = batch.join(
       verdicts.filter(!col("is_dup")).select(col("id").as(idCol)), Seq(idCol))
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // admitted docs FIRST (their plan probes the pre-write store), the
-      // batch signatures second — a crash between the two replays cleanly
-      // because the probe excludes this epoch's partition either way
-      admitted.withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(corpusPath)
-      graft.ops.Dedup.minHashSignatures(batch, idCol, textCol, n, numHashes)
-        .withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(sigPath)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // admitted docs FIRST (their plan probes the pre-write store), the
+    // batch signatures second — a crash between the two replays cleanly
+    // because the probe excludes this epoch's partition either way
+    writeEpoch(admitted, batchId, corpusPath)
+    writeEpoch(graft.ops.Dedup.minHashSignatures(batch, idCol, textCol, n,
+      numHashes), batchId, sigPath)
   }
 
   /** Streaming SEMANTIC ingest gate — [[graft.ops.Similarity.semDedup]]'s
@@ -401,44 +365,28 @@ object Pipeline {
     * reasoning behind the signature store keeping all batch signatures,
     * DedupSpec's dropped-seen-partners case). With id-ordered arrival this
     * makes the gate verdict-identical to running batch `semDedup` over
-    * everything seen so far — SimilaritySpec proves the equivalence.
-    *
-    * Same crash-safety as the text gate: the store is partitioned by
-    * `ingest_batch` with dynamic partition overwrite, and the probe
-    * excludes the current epoch's partition, so replays re-derive
-    * identical verdicts into their own partition.
+    * everything seen so far — SimilaritySpec proves the equivalence. The
+    * store is an epoch store (see [[Pipeline]]).
     */
   def semDedupIngestSink(vecs: DataFrame, idCol: String, vecCol: String,
                          centroids: Array[Array[Double]], storePath: String,
                          checkpoint: String,
                          tau: Double): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestSemDedupBatch(batch, batchId, idCol, vecCol, centroids,
-          storePath, tau)
-      }
+    foldSink(vecs, checkpoint)(ingestSemDedupBatch(_, _, idCol, vecCol,
+      centroids, storePath, tau))
 
-  /** One fold of [[semDedupIngestSink]]: assign, probe, admit, append. */
+  /** One fold of [[semDedupIngestSink]]: assign, probe, admit, write this
+    * epoch. */
   def ingestSemDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                           vecCol: String, centroids: Array[Array[Double]],
                           storePath: String, tau: Double): Unit = {
-    val spark = batch.sparkSession
-    import org.apache.hadoop.fs.Path
     val cos = graft.ops.Similarity.cosine _
     val assigned = batch.select(
       col(idCol), col(vecCol).cast("array<double>").as("v"),
       graft.functions.Native.nearest_centroid(
         col(vecCol).cast("array<double>"), centroids).as("cell"))
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen =
-      if (fs.exists(new Path(storePath)))
-        spark.read.parquet(storePath)
-          .filter(col("ingest_batch") =!= batchId)
-          .select(col(idCol), col("v"), col("cell"))
-      else assigned.limit(0)
+    val seen = otherEpochs(batch.sparkSession, storePath, batchId,
+      assigned.limit(0))
     val dupVsSeen = assigned.alias("b")
       .join(seen.select(col("cell"), col("v").as("sv")), Seq("cell"))
       .filter(round(cos(col("v"), col("sv")), 6) >= tau)
@@ -454,21 +402,7 @@ object Pipeline {
     val verdicts = assigned.join(dropped, Seq(idCol), "left")
       .select(col(idCol), col("v"), col("cell"),
         col("__dup").isNull.as("admitted"))
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      verdicts.withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(storePath)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    writeEpoch(verdicts, batchId, storePath)
   }
 
   /** Streaming SPAN-dedup ingest gate — the winnowing twin of
@@ -489,39 +423,25 @@ object Pipeline {
     * itself dropped for an earlier match — the same dropped-seniors
     * reasoning as the LSH and SemDeDup gates. Probe cost is
     * batch-fingerprints × store matches on the gram key — an equi-join,
-    * never batch × corpus. Crash-safe like its siblings: epoch-partitioned
-    * stores, dynamic partition overwrite, probes exclude the current
-    * epoch.
+    * never batch × corpus. Both stores are epoch stores (see
+    * [[Pipeline]]).
     */
   def spanDedupIngestSink(docs: DataFrame, idCol: String, textCol: String,
                           fpPath: String, corpusPath: String,
                           checkpoint: String, k: Int = 32,
                           w: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestSpanDedupBatch(batch, batchId, idCol, textCol, fpPath,
-          corpusPath, k, w)
-      }
+    foldSink(docs, checkpoint)(ingestSpanDedupBatch(_, _, idCol, textCol,
+      fpPath, corpusPath, k, w))
 
   /** One fold of [[spanDedupIngestSink]]: fingerprint, probe, admit,
-    * overwrite-this-epoch.
+    * write this epoch.
     */
   def ingestSpanDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                            textCol: String, fpPath: String,
                            corpusPath: String, k: Int, w: Int): Unit = {
-    val spark = batch.sparkSession
-    import org.apache.hadoop.fs.Path
     val fps = graft.ops.TextAnalysis.winnowGrams(batch, idCol, textCol, k, w)
-    val fs = new Path(fpPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen =
-      if (fs.exists(new Path(fpPath)))
-        spark.read.parquet(fpPath)
-          .filter(col("ingest_batch") =!= batchId)
-          .select(col("gram"))
-      else fps.limit(0).select(col("gram"))
+    val seen = otherEpochs(batch.sparkSession, fpPath, batchId,
+      fps.limit(0).select(col("gram")))
     val hitStore = fps
       .join(seen.distinct(), Seq("gram"), "left_semi")
       .select(col("doc_id"))
@@ -532,27 +452,11 @@ object Pipeline {
     val dropped = hitStore.unionByName(hitSenior).distinct()
     val admitted = batch.join(
       dropped.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // admitted corpus first (its plan probes the pre-write store), the
-      // batch fingerprints second — a crash between the two replays
-      // cleanly because the probe excludes this epoch's partition
-      admitted.withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(corpusPath)
-      fps.withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(fpPath)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // admitted corpus first (its plan probes the pre-write store), the
+    // batch fingerprints second — a crash between the two replays
+    // cleanly because the probe excludes this epoch's partition
+    writeEpoch(admitted, batchId, corpusPath)
+    writeEpoch(fps, batchId, fpPath)
   }
 
   /** Streaming data-quality monitor: the SAME declarative expectations the
@@ -721,10 +625,9 @@ object Pipeline {
     * clipping would silently reshape the distribution instead of
     * flagging it.
     *
-    * Replay safety: all three stores are epoch-partitioned by
-    * `ingest_batch` with dynamic partition overwrite, so a crashed epoch
-    * rewrites itself identically on resume (the PSI decision is a pure
-    * function of the batch and the constant reference). The per-batch
+    * All three stores are epoch stores (see [[Pipeline]]), and the PSI
+    * decision is a pure function of the batch and the constant reference,
+    * so a replayed epoch rewrites itself identically. The per-batch
     * driver action is ONE 1-row aggregate (`head`) — the decision
     * scalar; everything else is a narrow binned count.
     */
@@ -739,13 +642,8 @@ object Pipeline {
       s"driftGateSink: need ${edges.length + 1} reference shares")
     require(math.abs(refShares.sum - 1.0) < 1e-9,
       "driftGateSink: reference shares must sum to 1")
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestDriftGateBatch(batch, batchId, valCol, edges, refShares,
-          threshold, admitPath, quarantinePath, auditPath)
-      }
+    foldSink(events, checkpoint)(ingestDriftGateBatch(_, _, valCol, edges,
+      refShares, threshold, admitPath, quarantinePath, auditPath))
   }
 
   /** Token-level twin of [[driftGateSink]]: every micro-batch of
@@ -767,13 +665,8 @@ object Pipeline {
     require(refVocab.map(_._2).forall(_ >= 0) && refVocab.map(_._2).sum <= 1.0 + 1e-9,
       "vocabGateSink: reference shares must be non-negative and sum <= 1")
     require(alpha > 0, s"vocabGateSink: alpha > 0 (got $alpha)")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestVocabGateBatch(batch, batchId, textCol, refVocab, alpha,
-          threshold, admitPath, quarantinePath, auditPath)
-      }
+    foldSink(docs, checkpoint)(ingestVocabGateBatch(_, _, textCol, refVocab,
+      alpha, threshold, admitPath, quarantinePath, auditPath))
   }
 
   /** One fold of [[vocabGateSink]]: tokenize, fold counts onto the
@@ -817,27 +710,9 @@ object Pipeline {
     val nToks = row.getLong(1)
     val nDocs = batch.count()
     val admitted = nToks > 0 && js <= threshold
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val target = if (admitted) admitPath else quarantinePath
-      if (nDocs > 0)
-        batch.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite").partitionBy("ingest_batch")
-          .parquet(target)
-      Seq((batchId, nDocs, nToks, js, admitted))
-        .toDF("ingest_batch", "n_docs", "n_tokens", "js", "admitted")
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(auditPath)
-    } finally {
-      prior match {
-        case Some(pv) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", pv)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    routeAndAudit(batch, batchId, nDocs, admitted, admitPath, quarantinePath,
+      Seq((nDocs, nToks, js, admitted))
+        .toDF("n_docs", "n_tokens", "js", "admitted"), auditPath)
   }
 
   /** One fold of [[driftGateSink]]: bin, score, route, audit. */
@@ -878,26 +753,8 @@ object Pipeline {
     val nRows = psiRow.getLong(1)
     // a batch with no scorable value is quarantined wholesale
     val admitted = psiRow.getLong(2) > 0 && psi <= threshold
-    val prior =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val target = if (admitted) admitPath else quarantinePath
-      if (nRows > 0)
-        batch.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite").partitionBy("ingest_batch")
-          .parquet(target)
-      Seq((batchId, nRows, psi, admitted))
-        .toDF("ingest_batch", "n_rows", "psi", "admitted")
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(auditPath)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    routeAndAudit(batch, batchId, nRows, admitted, admitPath, quarantinePath,
+      Seq((nRows, psi, admitted)).toDF("n_rows", "psi", "admitted"),
+      auditPath)
   }
 }

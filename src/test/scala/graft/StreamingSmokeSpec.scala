@@ -805,4 +805,93 @@ class StreamingSmokeSpec extends SparkSpec {
       assert(streamKs.head.getAs[Double]("ks_stat") > 0.2)
     } finally q.stop()
   }
+
+  test("epoch folds replay in place under a STATIC session: a replayed " +
+      "epoch rewrites only itself, and no fold touches session conf") {
+    import org.apache.spark.sql.DataFrame
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
+    val docs = Seq(
+      Seq((1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "structured streaming writes parquet epochs")),
+      Seq((3L, "a prefix then the quick brown fox jumps over the lazy dog"),
+        (4L, "a wholly unrelated sentence about feature stores")))
+      .map(_.toDF("doc_id", "text"))
+    val edges = Array(1.0, 2.0, 3.0)
+    val shares = Array(0.25, 0.25, 0.25, 0.25)
+    // each fold: its stores and its call for (epoch, store root); batch 0
+    // and batch 1 differ so that both epochs hold rows, and the gates
+    // admit batch 0 and quarantine batch 1
+    val folds: Seq[(String, Seq[String], (Long, String) => Unit)] = Seq(
+      ("histogram", Seq("store"), (b, root) => Pipeline.ingestHistogramBatch(
+        Seq(Seq((ts(0), 5.0), (ts(1), 15.0), (ts(2000), 25.0)),
+          Seq((ts(2000), 25.0), (ts(4000), 75.0)))(b.toInt)
+          .toDF("ts", "value"), b, "ts", "value", 0.0, 100.0, 100,
+        root + "/store")),
+      ("flagship", Seq("store"), (b, root) => Pipeline.ingestFlagshipBatch(
+        Seq(Seq((1L, ts(0), "view", 10.0, 7L), (2L, ts(10), "click", 0.0, 9L)),
+          Seq((1L, ts(20), "purchase", 99.0, 7L),
+            (2L, ts(90), "view", 40.0, 8L)))(b.toInt)
+          .toDF("user_id", "ts_parsed", "event_type", "value", "k"),
+        b, root + "/store")),
+      ("near-dup", Seq("sigs", "corpus"), (b, root) =>
+        Pipeline.ingestNearDupBatch(docs(b.toInt), b, "doc_id", "text",
+          root + "/sigs", root + "/corpus", 3, 16, 4, 0.5)),
+      ("semantic", Seq("store"), (b, root) => Pipeline.ingestSemDedupBatch(
+        Seq(Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))),
+          Seq((3L, Seq(0.99, 0.01)), (4L, Seq(-1.0, 0.0))))(b.toInt)
+          .toDF("vec_id", "embedding"), b, "vec_id", "embedding",
+        Array(Array(1.0, 0.0), Array(0.0, 1.0)), root + "/store", 0.9)),
+      ("span", Seq("fps", "corpus"), (b, root) =>
+        Pipeline.ingestSpanDedupBatch(docs(b.toInt), b, "doc_id", "text",
+          root + "/fps", root + "/corpus", 16, 8)),
+      ("drift gate", Seq("admit", "quar", "audit"), (b, root) =>
+        Pipeline.ingestDriftGateBatch(
+          Seq((1 to 8).map(i => (i.toLong, 0.5 + i % 4)),
+            (9 to 16).map(i => (i.toLong, 3.5)))(b.toInt).toDF("id", "v"),
+          b, "v", edges, shares, 0.25, root + "/admit", root + "/quar",
+          root + "/audit")),
+      ("vocab gate", Seq("admit", "quar", "audit"), (b, root) =>
+        Pipeline.ingestVocabGateBatch(
+          Seq((1 to 4).map(i => (i.toLong, "alpha beta alpha beta")),
+            (5 to 8).map(i => (i.toLong, "spam casino pills spam")))(b.toInt)
+            .toDF("doc_id", "text"),
+          b, "text", Seq(("alpha", 0.5), ("beta", 0.5)), 0.5, 0.2,
+          root + "/admit", root + "/quar", root + "/audit")))
+    // epoch 0's files as written: name, size and modification time
+    def epoch0(store: String): Set[(String, Long, Long)] =
+      Option(new java.io.File(store + "/ingest_batch=0").listFiles())
+        .fold(Set.empty[(String, Long, Long)])(_.map(f =>
+          (f.getName, f.length, f.lastModified)).toSet)
+    def sameRows(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    try folds.foreach { case (name, stores, fold) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_epoch_")
+        .toString
+      def call(b: Long, dir: String): Unit = {
+        fold(b, dir)
+        assert(spark.conf.get(key) == "STATIC", s"$name wrote $key")
+      }
+      call(0L, root + "/once")
+      call(1L, root + "/once")
+      call(0L, root + "/replay")
+      val first = stores.map(st => epoch0(s"$root/replay/$st"))
+      call(1L, root + "/replay")
+      call(1L, root + "/replay") // the replayed epoch
+      assert(first.exists(_.nonEmpty), s"$name: no store holds epoch 0")
+      stores.zip(first).foreach { case (st, files) =>
+        assert(epoch0(s"$root/replay/$st") == files,
+          s"$name/$st: the replay rewrote epoch 0")
+        assert(sameRows(spark.read.parquet(s"$root/replay/$st"),
+            spark.read.parquet(s"$root/once/$st")),
+          s"$name/$st: the replayed store differs from a single pass")
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -9,10 +9,12 @@ code, so a `//` inside one does not start a comment. Block comments nest,
 as in Scala.
 
 Usage:
-    python3 tools/sloc.py [REV]
+    python3 tools/sloc.py [REV [PATH...]]
 
-Prints the counts for src/main and src/test at REV (default HEAD, read
-with `git show`, no checkout) and in the working tree, and the change.
+Prints the counts at REV (default HEAD, read with `git show`, no
+checkout) and in the working tree, and the change, one column per path:
+src/main and src/test by default, else each PATH (a .scala file or a
+directory) given after REV. A path missing on one side counts 0 there.
 """
 import os
 import subprocess
@@ -100,35 +102,44 @@ def git(*args):
                           capture_output=True).stdout
 
 
-def count_at(rev):
+def count_at(rev, paths):
     out = {}
-    for d in DIRS:
+    for d in paths:
         names = git("ls-tree", "-r", "--name-only", rev, "--", d).decode()
         out[d] = sum(code_lines(git("show", f"{rev}:{p}").decode("utf-8"))
                      for p in names.split("\n") if p.endswith(".scala"))
     return out
 
 
-def count_worktree():
+def count_worktree(paths):
     out = {}
-    for d in DIRS:
+    for d in paths:
+        full = os.path.join(ROOT, d)
+        if os.path.isfile(full):
+            found = [full]
+        else:
+            found = [os.path.join(base, f)
+                     for base, _, files in os.walk(full) for f in files]
         total = 0
-        for base, _, files in os.walk(os.path.join(ROOT, d)):
-            for f in files:
-                if f.endswith(".scala"):
-                    with open(os.path.join(base, f), encoding="utf-8") as fh:
-                        total += code_lines(fh.read())
+        for p in found:
+            if p.endswith(".scala"):
+                with open(p, encoding="utf-8") as fh:
+                    total += code_lines(fh.read())
         out[d] = total
     return out
 
 
 def main():
     rev = sys.argv[1] if len(sys.argv) > 1 else "HEAD"
-    at, now = count_at(rev), count_worktree()
-    print(f"{'':>12}" + "".join(f"{d:>10}" for d in DIRS))
-    print(f"{rev[:12]:>12}" + "".join(f"{at[d]:>10}" for d in DIRS))
-    print(f"{'worktree':>12}" + "".join(f"{now[d]:>10}" for d in DIRS))
-    print(f"{'change':>12}" + "".join(f"{now[d] - at[d]:>+10}" for d in DIRS))
+    paths = sys.argv[2:] or DIRS
+    at, now = count_at(rev, paths), count_worktree(paths)
+    names = [os.path.basename(p) if p.endswith(".scala") else p
+             for p in paths]
+    w = max(10, *(len(n) + 2 for n in names))
+    print(f"{'':>12}" + "".join(f"{n:>{w}}" for n in names))
+    print(f"{rev[:12]:>12}" + "".join(f"{at[d]:>{w}}" for d in paths))
+    print(f"{'worktree':>12}" + "".join(f"{now[d]:>{w}}" for d in paths))
+    print(f"{'change':>12}" + "".join(f"{now[d] - at[d]:>+{w}}" for d in paths))
 
 
 if __name__ == "__main__":
