@@ -110,7 +110,9 @@ class FeatureStore(@annotation.unused spark: SparkSession) {
 
   /** Multi-view online read: one `req_idx` stamp up front, then a chained
     * broadcast point lookup per view — responses align to the request
-    * order with every view's `view__feature` columns side by side.
+    * order with every view's `view__feature` columns side by side. The
+    * request-sized frame is ordered in one partition (`coalesce(1)` and a
+    * local sort), not range-partitioned: no sampling job, no shuffle.
     */
   def getOnlineFeaturesMulti(keys: DataFrame, names: Seq[String]): DataFrame = {
     // req_idx leads the response columns
@@ -123,7 +125,7 @@ class FeatureStore(@annotation.unused spark: SparkSession) {
       Retrieval.selectFeatureRefs(
         Retrieval.pointLookup(acc, snap, v.entityCol), v.name, v.features,
         acc.columns.toSeq)
-    }.orderBy("req_idx")
+    }.coalesce(1).sortWithinPartitions("req_idx")
   }
 
   /** Online read: broadcast point lookup against the materialized

@@ -116,16 +116,30 @@ object KvStore {
       case 'L' => f.substring(1).toLong
     }
 
+  /** The write order: (ts, tiebreak) ahead of (ots, otb), or equal to
+    * it — on an exact tie the later write wins. */
+  private def supersedes(ts: Long, tb: Long, ots: Long, otb: Long): Boolean =
+    ts > ots || (ts == ots && tb >= otb)
+
+  /** A fixed stripe of per-key locks around the read-compare-put: the
+    * embedded stand-in for an atomic compare-and-set script on Redis. */
+  private val KeyLocks = Array.fill(64)(new Object)
+
   /** Upsert a batch of feature rows, keeping per entity the newest row by
-    * (ts, tiebreak) across EVERYTHING ever written. Two-stage, like the
-    * Redis materialization job: (1) a distributed latest-per-key reduce
-    * collapses the batch to one candidate row per entity (associative
-    * max-struct — a hot key ships at most #partitions rows, see
-    * [[graft.ops.Materialize.latestPerKey]]); (2) each task partition
-    * opens the shared store connection and conditionally puts its keys.
-    * After stage 1 a key appears in exactly one task, so the
-    * read-compare-put has no same-key race; cross-batch ordering is
-    * irrelevant because the compare is on event time, not arrival.
+    * (ts, tiebreak) across EVERYTHING ever written. One pass, no shuffle:
+    * each task keeps its partition's newest row per key in a map, then
+    * opens the shared store connection and, per key, reads the stored
+    * row, compares and puts under the key's lock. Tasks of one batch can
+    * hold the same key, so the lock is what keeps a concurrent older
+    * row from overwriting a newer one; a hot key costs at most one
+    * compare-and-put per partition. Cross-batch ordering is irrelevant
+    * because the compare is on event time, not arrival.
+    *
+    * On an exact tie (equal ts and tiebreak) the later write wins, in a
+    * partition and in the store: replaying a row rewrites it in place.
+    * With a tiebreak unique per (key, ts), as required, ties are only
+    * such replays, and the store equals
+    * [[graft.ops.Materialize.latestPerKey]] of everything upserted.
     *
     * `tsCol` must be a timestamp (ntz ok, read under the UTC session);
     * `tiebreakCol` a long unique per (key, ts); features double/string/long.
@@ -142,31 +156,34 @@ object KvStore {
     if (prior == null) db.put(SchemaKey, schemaRec.getBytes("UTF-8"))
     else require(new String(prior, "UTF-8") == schemaRec,
       "KvStore.upsertLatest: feature schema mismatch with existing store")
-    val reduced = graft.ops.Materialize
-      .latestPerKey(batch.select((keyCol +: tsCol +: tiebreakCol +:
-        featureCols).map(col): _*), keyCol, tsCol, tiebreakCol)
-      .select(col(keyCol).cast("string").as("__k"),
-        unix_micros(col(tsCol).cast("timestamp")).as("__ts"),
-        col(tiebreakCol).cast("long").as("__tb"),
-        struct(featureCols.map(col): _*).as("__f"))
+    val rows = batch.select(col(keyCol).cast("string").as("__k"),
+      unix_micros(col(tsCol).cast("timestamp")).as("__ts"),
+      col(tiebreakCol).cast("long").as("__tb"),
+      struct(featureCols.map(col): _*).as("__f"))
     val tagsB = tags
-    reduced.foreachPartition { (rows: Iterator[Row]) =>
+    rows.foreachPartition { (it: Iterator[Row]) =>
+      val newest = new java.util.HashMap[String, Row]
+      it.foreach { r =>
+        val cur = newest.get(r.getString(0))
+        if (cur == null || supersedes(r.getLong(1), r.getLong(2),
+            cur.getLong(1), cur.getLong(2))) newest.put(r.getString(0), r)
+      }
       val store = open(path)
-      rows.foreach { r =>
-        val key = r.getString(0).getBytes("UTF-8")
+      newest.forEach { (k, r) =>
+        val key = k.getBytes("UTF-8")
         val ts = r.getLong(1); val tb = r.getLong(2)
-        val f = r.getStruct(3)
-        val existing = store.get(key)
-        val newer = existing == null || {
-          val parts = new String(existing, "UTF-8").split(Sep)
-          val (ots, otb) = (parts(0).toLong, parts(1).toLong)
-          ts > ots || (ts == ots && tb >= otb)
-        }
-        if (newer) {
-          val fields = tagsB.indices.map(i => encodeField(tagsB(i), f, i))
-          store.put(key,
-            (s"$ts$Sep$tb$Sep" + fields.mkString(Sep.toString))
-              .getBytes("UTF-8"))
+        KeyLocks(Math.floorMod(k.hashCode, KeyLocks.length)).synchronized {
+          val existing = store.get(key)
+          if (existing == null || {
+            val parts = new String(existing, "UTF-8").split(Sep)
+            supersedes(ts, tb, parts(0).toLong, parts(1).toLong)
+          }) {
+            val f = r.getStruct(3)
+            val fields = tagsB.indices.map(i => encodeField(tagsB(i), f, i))
+            store.put(key,
+              (s"$ts$Sep$tb$Sep" + fields.mkString(Sep.toString))
+                .getBytes("UTF-8"))
+          }
         }
       }
     }

@@ -23,11 +23,12 @@ import org.apache.spark.sql.Row
   * semantic, span, drift and vocab folds:
   *   - every store is partitioned by `ingest_batch`, the `foreachBatch`
   *     epoch id, and written only by [[writeEpoch]];
-  *   - each write is a dynamic partition overwrite, set on the write
-  *     itself, so it replaces its own epoch and leaves every other epoch
-  *     (and the session conf) alone;
+  *   - each write overwrites its epoch directory, `path/ingest_batch=<id>`,
+  *     and leaves every other epoch (and the session conf) alone;
   *   - a probe reads only the other epochs ([[otherEpochs]]), so a
-  *     replayed micro-batch never meets its first attempt's output.
+  *     replayed micro-batch never meets its first attempt's output;
+  *   - every read goes through [[readStore]], which takes the schema from
+  *     a data file's footer; `ingest_batch` reads as an int.
   * A replay therefore re-derives the same verdicts into the same
   * partitions, whatever point the first attempt crashed at.
   */
@@ -42,14 +43,49 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch(fold)
 
-  /** Write `df` as epoch `batchId` of the store at `path`, replacing that
-    * epoch only (a per-write dynamic overwrite). */
+  /** Write `df` as epoch `batchId` of the store at `path`: an overwrite of
+    * that epoch's directory only. */
   private def writeEpoch(df: DataFrame, batchId: Long, path: String): Unit =
-    df.withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(path)
+    df.write.mode("overwrite").parquet(s"$path/ingest_batch=$batchId")
+
+  /** Read a store this object wrote, with the Spark schema its writer put
+    * in a data file's footer (`org.apache.spark.sql.parquet.row.metadata`)
+    * instead of the schema-inference job `spark.read.parquet` runs. `_*`
+    * and `.*` entries are skipped, as Spark's listing skips them. An epoch
+    * store adds `ingest_batch`, typed as partition inference types it: an
+    * int while every epoch id fits one, else a long.
+    */
+  private[graft] def readStore(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.types._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(dir: Path): Array[FileStatus] = fs.listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val (epochs, files) = visible(root).partition(_.isDirectory)
+    val dataFile = (files.iterator ++ epochs.iterator.flatMap(e =>
+        visible(e.getPath).filter(_.isFile))).nextOption()
+      .getOrElse(throw new IllegalArgumentException(
+        s"Pipeline.readStore: no data file under $path"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        dataFile.getPath, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+    require(json != null,
+      s"Pipeline.readStore: ${dataFile.getPath} has no Spark schema")
+    val data = DataType.fromJson(json).asInstanceOf[StructType]
+    val schema =
+      if (epochs.isEmpty) data
+      else data.add("ingest_batch",
+        if (epochs.forall(_.getPath.getName.stripPrefix("ingest_batch=")
+          .toLong.isValidInt)) IntegerType else LongType)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** The store at `path` minus epoch `batchId`, projected to `empty`'s
     * columns; `empty` itself while the store does not exist yet. */
@@ -57,7 +93,7 @@ object Pipeline {
                           empty: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(path)
+      readStore(spark, path)
         .filter(col("ingest_batch") =!= batchId)
         .select(empty.columns.map(col): _*)
     else empty
@@ -213,7 +249,7 @@ object Pipeline {
   /** Read side of [[histogramStoreSink]]: fold the epoch partitions to the
     * canonical (day, bin, cnt) store. */
   def histogramStore(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(storePath)
+    readStore(spark, storePath)
       .groupBy(col("day"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
 
@@ -241,7 +277,7 @@ object Pipeline {
   def flagshipFromStore(spark: SparkSession, storePath: String): DataFrame =
     graft.ops.WindowAgg.finalizeHourly(
       graft.ops.WindowAgg.mergeHourlyPartials(
-        spark.read.parquet(storePath).drop("ingest_batch")))
+        readStore(spark, storePath).drop("ingest_batch")))
 
   /** S8×S9 fused: streaming materialization INTO the real JDBC registry —
     * the reference's airflow flow (`feature_store_materialization.py:
@@ -267,7 +303,7 @@ object Pipeline {
                               table: String = "feature_freshness"): DataStreamWriter[Row] =
     foldSink(features, checkpoint) { (batch, _) =>
       upsertSnapshot(batch, storePath, keyCol, tsCol, tiebreakCol)
-      val snap = batch.sparkSession.read.parquet(storePath)
+      val snap = readStore(batch.sparkSession, storePath)
         .withColumn("view_name", lit(viewName))
         .withColumn("ts_us", unix_micros(col(tsCol).cast("timestamp")))
       graft.sources.JdbcRegistry.publishFreshness(
@@ -295,8 +331,8 @@ object Pipeline {
     // crash recovery: live missing but .old present ⇒ previous fold died
     // between retire and promote — the retired snapshot is authoritative
     val base =
-      if (fs.exists(live)) spark.read.parquet(storePath)
-      else if (fs.exists(old)) spark.read.parquet(storePath + ".old")
+      if (fs.exists(live)) readStore(spark, storePath)
+      else if (fs.exists(old)) readStore(spark, storePath + ".old")
       else batch.limit(0)
     val merged = graft.ops.Materialize.latestPerKey(
       base.unionByName(batch), keyCol, tsCol, tiebreakCol)

@@ -115,8 +115,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("reliable-checkpoint parity: kmeans identical via Ckpt.cut(dir)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      .toString
+    val dir = tempDir("graft-ckpt")
     val emb = Seq(
       (0L, Array(0.0, 0.1)), (1L, Array(0.1, 0.0)), (2L, Array(0.05, 0.05)),
       (3L, Array(5.0, 5.1)), (4L, Array(5.1, 5.0)), (5L, Array(5.05, 5.05)))

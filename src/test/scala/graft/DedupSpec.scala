@@ -561,8 +561,7 @@ class DedupSpec extends SparkSpec {
 
   test("reliable-checkpoint parity: both connected-components forms " +
       "identical via Ckpt.cut(dir) as via localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      .toString
+    val dir = tempDir("graft-ckpt")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L))
       .toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(pairs, "id_a", "id_b")

@@ -51,6 +51,36 @@ class FeatureStoreSpec extends SparkSpec {
     missIdx.foreach { case (_, i) => assert(out(i).isNullAt(2)) }
   }
 
+  test("online read of an empty request is an empty frame; duplicate keys " +
+      "over 3 partitions keep request order and rows") {
+    val fs = new FeatureStore(spark)
+    fs.applyView(ordersView)
+    val none = fs.getOnlineFeatures(Seq.empty[Long].toDF("o_custkey"), "orders")
+    assert(none.columns.toSeq == Seq("req_idx", "o_custkey",
+      "orders__o_totalprice", "orders__o_orderstatus"))
+    assert(none.collect().isEmpty)
+    val requested = Seq(7L, 3L, 7L, -5L, 1L, 3L, 7L)
+    val keys = spark.sparkContext.parallelize(requested, 3).toDF("o_custkey")
+    val out = fs.getOnlineFeatures(keys, "orders").collect()
+    assert(out.map(_.getLong(1)).toSeq == requested)
+    val idx = out.map(_.getLong(0)).toSeq
+    assert(idx == idx.sorted && idx.distinct.size == requested.size)
+    // a repeated key gets the same features at every position
+    out.groupBy(_.getLong(1)).values.foreach(rs =>
+      assert(rs.map(_.toSeq.drop(2)).distinct.length == 1))
+    assert(out.filter(_.getLong(1) == -5L).forall(_.isNullAt(2)))
+  }
+
+  test("job budget: an online read of 3 keys is 2 jobs (the snapshot " +
+      "broadcast and the collect)") {
+    val fs = new FeatureStore(spark)
+    fs.applyView(ordersView)
+    fs.materialize("orders").count()
+    val keys = Seq(7L, 3L, 1L).toDF("o_custkey")
+    fs.getOnlineFeatures(keys, "orders").collect()
+    assert(jobsIn(fs.getOnlineFeatures(keys, "orders").collect()) == 2)
+  }
+
   test("incremental materialize fold equals the full-history snapshot") {
     val fs = new FeatureStore(spark)
     val o = Tables.orders(spark, sfDir)

@@ -215,8 +215,7 @@ class GraphSpec extends SparkSpec {
 
   test("reliable-checkpoint parity: pageRank and hits produce identical " +
       "results via Ckpt.cut(dir) as via localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      .toString
+    val dir = tempDir("graft-ckpt")
     val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
       .toDF("src", "dst")
     val prLocal = Graph.pageRank(g, "src", "dst", iterations = 5)
@@ -252,8 +251,7 @@ class GraphSpec extends SparkSpec {
     assert(s(20L) == (20L, 1L))
     assert(Seq(21L, 22L, 23L).forall(s(_) == (21L, 3L)))
     // reliable-checkpoint path is bit-identical
-    val dir = java.nio.file.Files.createTempDirectory("lpa_ckpt")
-      .toString
+    val dir = tempDir("lpa_ckpt")
     val rel = Graph.labelPropagation(tri, "src", "dst", rounds = 4,
       checkpointDir = Some(dir)).collect().toSeq
     val loc = Graph.labelPropagation(tri, "src", "dst", rounds = 4)

@@ -8,15 +8,13 @@ import org.apache.spark.sql.functions._
   * this spec covers the JDBC mechanics an oracle can't see — partition
   * fan-out, overwrite idempotency, registry re-publication).
   */
-class JdbcRegistrySpec extends SparkSpec
-    with org.scalatest.BeforeAndAfterAll {
+class JdbcRegistrySpec extends SparkSpec {
   import spark.implicits._
 
   private val created = scala.collection.mutable.ListBuffer[String]()
 
   private def freshUrl(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_derby_spec_")
-      .toString
+    val root = tempDir("graft_derby_spec_")
     created += root
     s"jdbc:derby:$root/db;create=true"
   }
@@ -26,7 +24,6 @@ class JdbcRegistrySpec extends SparkSpec
       try java.sql.DriverManager
         .getConnection(s"jdbc:derby:$root/db;shutdown=true")
       catch { case _: java.sql.SQLException => () } // success SIGNALS via SQLException
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
     super.afterAll()
   }

@@ -11,24 +11,19 @@ import org.apache.spark.sql.functions._
   * misses, 32-way concurrent partition writes, and the fail-loud schema
   * guard.
   */
-class KvStoreSpec extends SparkSpec
-    with org.scalatest.BeforeAndAfterAll {
+class KvStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private val created = scala.collection.mutable.ListBuffer[String]()
 
   private def freshPath(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_kvspec_")
-      .toString
+    val root = tempDir("graft_kvspec_")
     created += root
     root + "/store"
   }
 
   override def afterAll(): Unit = {
-    created.foreach { root =>
-      KvStore.destroy(root + "/store")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
+    created.foreach(root => KvStore.destroy(root + "/store"))
     super.afterAll()
   }
 
@@ -108,6 +103,60 @@ class KvStoreSpec extends SparkSpec
       .map(_ * 1.5).sum)
   }
 
+  test("partitions that all hold every key: the per-key lock keeps the " +
+      "store equal to latestPerKey (seeded, 5 runs in shuffled order)") {
+    // every partition holds each key once, so every task races every
+    // other on every key; few distinct ts, so the tiebreak decides often
+    val (nKeys, nParts) = (1000, 32)
+    val rnd = new scala.util.Random(1502L)
+    val blocks = (0 until nParts).map(p => (0 until nKeys).map(k =>
+      (k.toLong, ts(rnd.nextInt(50)), (p * nKeys + k).toLong, rnd.nextDouble())))
+    val expected = graft.ops.Materialize
+      .latestPerKey(blocks.flatten.toDF("k", "ts", "tb", "v"), "k", "ts", "tb")
+      .select($"k".cast("string"), $"tb", $"v").as[(String, Long, Double)]
+      .collect().toSet
+    (1 to 5).foreach { run =>
+      val path = freshPath()
+      val rows = rnd.shuffle(blocks).flatMap(b => rnd.shuffle(b))
+      val batch = spark.sparkContext.parallelize(rows, nParts)
+        .toDF("k", "ts", "tb", "v")
+      assert(batch.rdd.mapPartitions(it =>
+          Iterator(it.map(_.getLong(0)).toSet.size)).collect()
+        .sameElements(Array.fill(nParts)(nKeys)))
+      KvStore.upsertLatest(batch, path, "k", "ts", "tb", Seq("v"))
+      val got = KvStore.snapshot(spark, path)
+        .select($"entity_id", $"tiebreak", $"v").as[(String, Long, Double)]
+        .collect().toSet
+      assert(got == expected, s"run $run: ${(expected -- got).size} keys " +
+        "lost their newest row")
+    }
+  }
+
+  test("exact (ts, tiebreak) tie: the later write wins") {
+    val path = freshPath()
+    Seq((1.0, "first"), (2.0, "second")).foreach { case (v, s) =>
+      KvStore.upsertLatest(Seq((5L, ts(1), 7L, v, s))
+        .toDF("k", "ts", "tb", "v", "s"), path, "k", "ts", "tb", Seq("v", "s"))
+    }
+    assert(KvStore.getBatch(path, Seq("5")) == Seq(Seq(2.0, "second")))
+  }
+
+  test("job budget: upsertLatest runs the batch's own jobs and one more, " +
+      "no shuffle of its own") {
+    val raw = Tables.events(spark, sfDir)
+      .select($"event_id", $"ts".cast("timestamp").as("ts"), $"user_id",
+        $"event_type", $"value", $"props")
+    val feats = graft.streaming.Pipeline.streamingFeatures(raw)
+      .withColumn("tb", lit(0L))
+    val cols = Seq("total_events", "click_count", "unique_k_approx",
+      "total_revenue")
+    val path = freshPath()
+    KvStore.upsertLatest(feats, path, "user_id", "window_end", "tb", cols)
+    // the features' aggregation shuffle, then the upsert itself
+    assert(jobsIn(KvStore.upsertLatest(feats, path, "user_id", "window_end",
+      "tb", cols)) == 2)
+  }
+
   test("point lookup: request order and rows preserved; missing entities " +
       "surface NULL features") {
     val path = freshPath()
@@ -139,9 +188,7 @@ class KvStoreSpec extends SparkSpec
       "store equals the batch latestPerKey fold (replay-safe)") {
     implicit val sqlCtx = spark.sqlContext
     val path = freshPath()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kvckpt_")
-      .toString
-    created += ckpt // cleanup (destroy() of non-store path is harmless)
+    val ckpt = tempDir("graft_kvckpt_")
     val stream = MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
     def startSink() = KvStore.streamingSink(
         stream.toDF().toDF("k", "ts", "tb", "v"),

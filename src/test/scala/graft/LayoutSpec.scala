@@ -61,7 +61,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compaction bounds file count without changing content") {
     val df = Tables.events(spark, sfDir).select("event_id", "value")
-    val scattered = java.nio.file.Files.createTempDirectory("graft_scatter_").toString
+    val scattered = tempDir("graft_scatter_")
     df.repartition(16).write.mode("overwrite").parquet(scattered)
     def files(p: String) = new java.io.File(p).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -160,8 +160,7 @@ class LayoutSpec extends SparkSpec {
   test("parquetFooter: value counts reconcile per column, compressed " +
       "never exceeds uncompressed, directories and bare files both read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_footer_")
-      .toString
+    val dir = tempDir("graft_footer_")
     (1L to 1000L).map(i => (i, s"name_$i", i * 1.5))
       .toDF("id", "name", "v").coalesce(2)
       .write.mode("overwrite").parquet(dir)
@@ -179,7 +178,6 @@ class LayoutSpec extends SparkSpec {
       .as[(String, Long, String, Long, Long, Long)].collect()
     assert(single.map(_._3).distinct.sorted.toSeq ==
       Seq("id", "name", "v"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("compression audit via footers: zstd beats snappy on repetitive " +
@@ -190,8 +188,7 @@ class LayoutSpec extends SparkSpec {
       .map(i => (i, ("the quick brown fox " * 10) + (i % 7)))
       .toDF("id", "txt")
     def writeWith(codec: String): String = {
-      val d = java.nio.file.Files
-        .createTempDirectory(s"graft_codec_${codec}_").toString
+      val d = tempDir(s"graft_codec_${codec}_")
       df.coalesce(1).write.mode("overwrite")
         .option("compression", codec).parquet(d)
       d
@@ -206,7 +203,5 @@ class LayoutSpec extends SparkSpec {
     // logical contents identical either way
     val back = spark.read.parquet(zstdDir)
     assert(back.exceptAll(spark.read.parquet(snappyDir)).isEmpty)
-    Seq(snappyDir, zstdDir).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 }

@@ -191,8 +191,7 @@ class LearnSpec extends SparkSpec {
 
   test("reliable-checkpoint parity: bradleyTerry identical via " +
       "Ckpt.cut(dir) as via localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      .toString
+    val dir = tempDir("graft-ckpt")
     val comps = Seq((1L, 2L), (1L, 2L), (2L, 3L), (1L, 3L), (3L, 2L))
       .toDF("winner", "loser")
     val local = Learn.bradleyTerry(comps, "winner", "loser",

@@ -52,7 +52,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata projection prunes the payload from the read schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm").toString
+    val dir = tempDir("graft_mm")
     Multimodal.asBinaryTable(docs, "doc_id", "text")
       .write.mode("overwrite").parquet(dir)
     val meta = Multimodal.metadata(spark.read.parquet(dir), "doc_id")

@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.registry.Shared
 
@@ -12,33 +8,6 @@ import graft.registry.Shared
   * per-layer names, and each builder fills the cache its accessor reads.
   */
 class SharedSpec extends SparkSpec {
-
-  /** Spark jobs started by `body`. A marker job runs after it: listener
-    * events arrive in order, so once the marker's start is seen every
-    * job `body` started has been counted. */
-  private def jobsIn(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == "shared-spec-marker"))
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("shared-spec-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("artifactBuilders are BENCHMARK.json's registry.Shared per-layer " +
       "names, in order") {

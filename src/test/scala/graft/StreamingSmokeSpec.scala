@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.streaming.Pipeline
 
 /** Batch ≡ stream for closed windows (SURVEY.md §7.3#4): push the sf0.001
@@ -121,8 +123,8 @@ class StreamingSmokeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val stream = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val store = java.nio.file.Files.createTempDirectory("graft_store_").toString + "/snap"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt2_").toString
+    val store = tempDir("graft_store_") + "/snap"
+    val ckpt = tempDir("graft_ckpt2_")
     val q = Pipeline.onlineStoreSink(
         stream.toDF().toDF("user_id", "ts", "value"),
         store, ckpt, "user_id", "ts", "value")
@@ -150,9 +152,8 @@ class StreamingSmokeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val stream = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val store = java.nio.file.Files.createTempDirectory("graft_resume_")
-      .toString + "/snap"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rckpt_").toString
+    val store = tempDir("graft_resume_") + "/snap"
+    val ckpt = tempDir("graft_rckpt_")
     def startSink() = Pipeline.onlineStoreSink(
         stream.toDF().toDF("user_id", "ts", "value"),
         store, ckpt, "user_id", "ts", "value")
@@ -186,9 +187,8 @@ class StreamingSmokeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-01-0$day%d 10:00:00")
     val stream = MemoryStream[(java.sql.Timestamp, Double)]
-    val store = java.nio.file.Files.createTempDirectory("graft_hist_")
-      .toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hckpt_").toString
+    val store = tempDir("graft_hist_") + "/store"
+    val ckpt = tempDir("graft_hckpt_")
     def start() = Pipeline.histogramStoreSink(
         stream.toDF().toDF("ts", "value"),
         "ts", "value", 0.0, 100.0, 100, store, ckpt)
@@ -226,9 +226,8 @@ class StreamingSmokeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val stream = MemoryStream[(Long, java.sql.Timestamp, String, Double, Long)]
-    val store = java.nio.file.Files.createTempDirectory("graft_fpart_")
-      .toString + "/partials"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fckpt_").toString
+    val store = tempDir("graft_fpart_") + "/partials"
+    val ckpt = tempDir("graft_fckpt_")
     val cols = Seq("user_id", "ts_parsed", "event_type", "value", "k")
     def start() = Pipeline.flagshipPartialsSink(
       stream.toDF().toDF(cols: _*), store, ckpt).start()
@@ -273,7 +272,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val (p1, rest) = rows.splitAt(rows.length / 3)
     val (p2, p3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[(Long, String)]
-    val root = java.nio.file.Files.createTempDirectory("graft_ndi_").toString
+    val root = tempDir("graft_ndi_")
     def startSink() = Pipeline.nearDupIngestSink(
         stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
         root + "/sigs", root + "/corpus", root + "/ckpt").start()
@@ -316,7 +315,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val (p1, rest) = rows.splitAt(rows.length / 3)
     val (p2, p3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[(Long, Seq[Float])]
-    val root = java.nio.file.Files.createTempDirectory("graft_sdi_").toString
+    val root = tempDir("graft_sdi_")
     def startSink() = Pipeline.semDedupIngestSink(
         stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
         seeds, root + "/store", root + "/ckpt", 0.4).start()
@@ -359,7 +358,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val (p1, rest) = rows.splitAt(rows.length / 3)
     val (p2, p3) = rest.splitAt(rest.length / 2)
     val stream = MemoryStream[(Long, String)]
-    val root = java.nio.file.Files.createTempDirectory("graft_spi_").toString
+    val root = tempDir("graft_spi_")
     def startSink() = Pipeline.spanDedupIngestSink(
         stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
         root + "/fps", root + "/corpus", root + "/ckpt",
@@ -401,8 +400,8 @@ class StreamingSmokeSpec extends SparkSpec {
     val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
     val sdf = stream.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val out = java.nio.file.Files.createTempDirectory("graft_sf_out_").toString + "/agg"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sf_ckpt_").toString
+    val out = tempDir("graft_sf_out_") + "/agg"
+    val ckpt = tempDir("graft_sf_ckpt_")
     def startSink() =
       Pipeline.parquetSink(Pipeline.streamingFeatures(sdf), out, ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -454,10 +453,8 @@ class StreamingSmokeSpec extends SparkSpec {
     val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
     val sdf = stream.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_matloop_kv_").toString + "/kv"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_matloop_ckpt_").toString
+    val store = tempDir("graft_matloop_kv_") + "/kv"
+    val ckpt = tempDir("graft_matloop_ckpt_")
     def startSink() = Pipeline.materializeLoopSink(sdf, store, ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -501,10 +498,9 @@ class StreamingSmokeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val stream = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val store = java.nio.file.Files.createTempDirectory("graft_reg_")
-      .toString + "/snap"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_regck_").toString
-    val dbRoot = java.nio.file.Files.createTempDirectory("graft_regdb_").toString
+    val store = tempDir("graft_reg_") + "/snap"
+    val ckpt = tempDir("graft_regck_")
+    val dbRoot = tempDir("graft_regdb_")
     val url = s"jdbc:derby:$dbRoot/db;create=true"
     def startSink() = Pipeline.registryMaterializeSink(
         stream.toDF().toDF("user_id", "ts", "value"),
@@ -538,13 +534,12 @@ class StreamingSmokeSpec extends SparkSpec {
       try java.sql.DriverManager
         .getConnection(s"jdbc:derby:$dbRoot/db;shutdown=true")
       catch { case _: java.sql.SQLException => () } // success SIGNALS via SQLException
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dbRoot))
     }
   }
 
   test("online-store upsert recovers from a crash between retire and promote") {
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
-    val store = java.nio.file.Files.createTempDirectory("graft_crash_").toString + "/snap"
+    val store = tempDir("graft_crash_") + "/snap"
     Pipeline.upsertSnapshot(
       Seq((1L, ts(0), 10.0), (2L, ts(0), 20.0)).toDF("user_id", "ts", "value"),
       store, "user_id", "ts", "value")
@@ -573,8 +568,8 @@ class StreamingSmokeSpec extends SparkSpec {
     val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
     val sdf = stream.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val out = tempDir("graft_sink_")
+    val ckpt = tempDir("graft_ckpt_")
     // AvailableNow snapshots "available" offsets at query start — data must
     // be in the stream BEFORE start() (adding it after is a lost race)
     stream.addData(rows)
@@ -649,7 +644,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val b2 = (41 to 80).map(i => (i.toLong, 3.5))
     val b3 = (81 to 120).map(i => (i.toLong, 0.5 + (i % 4) * 1.0))
     val stream = MemoryStream[(Long, Double)]
-    val root = java.nio.file.Files.createTempDirectory("graft_dg_").toString
+    val root = tempDir("graft_dg_")
     def startSink() = Pipeline.driftGateSink(
         stream.toDF().toDF("id", "v"), "v", edges, shares,
         threshold = 0.25, root + "/admit", root + "/quar",
@@ -694,7 +689,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val nulls = Seq.fill[java.lang.Double](4)(null)
     val nans = Seq.fill[java.lang.Double](4)(Double.NaN)
     val batches = Seq(inBand, inBand ++ nulls, inBand ++ nans, nulls ++ nans)
-    val root = java.nio.file.Files.createTempDirectory("graft_dgc_").toString
+    val root = tempDir("graft_dgc_")
     batches.zipWithIndex.foreach { case (vs, b) =>
       Pipeline.ingestDriftGateBatch(
         vs.zipWithIndex.map { case (v, i) => (b * 100L + i, v) }
@@ -723,7 +718,7 @@ class StreamingSmokeSpec extends SparkSpec {
     val b2 = (21 to 40).map(i => (i.toLong, "spam casino pills spam"))
     val b3 = (41 to 60).map(i => (i.toLong, "beta alpha beta alpha"))
     val stream = MemoryStream[(Long, String)]
-    val root = java.nio.file.Files.createTempDirectory("graft_vg_").toString
+    val root = tempDir("graft_vg_")
     def startSink() = Pipeline.vocabGateSink(
         stream.toDF().toDF("doc_id", "text"), "text", ref, alpha = 0.5,
         threshold = 0.2, root + "/admit", root + "/quar",
@@ -806,70 +801,70 @@ class StreamingSmokeSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The seven epoch folds: each fold's stores and its call for (epoch,
+    * store root). Batch 0 and batch 1 differ so that both epochs hold
+    * rows, and the gates admit batch 0 and quarantine batch 1. */
+  private def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
+  private lazy val docs = Seq(
+    Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "structured streaming writes parquet epochs")),
+    Seq((3L, "a prefix then the quick brown fox jumps over the lazy dog"),
+      (4L, "a wholly unrelated sentence about feature stores")))
+    .map(_.toDF("doc_id", "text"))
+  private val edges = Array(1.0, 2.0, 3.0)
+  private val shares = Array(0.25, 0.25, 0.25, 0.25)
+  private lazy val folds: Seq[(String, Seq[String], (Long, String) => Unit)] = Seq(
+    ("histogram", Seq("store"), (b, root) => Pipeline.ingestHistogramBatch(
+      Seq(Seq((ts(0), 5.0), (ts(1), 15.0), (ts(2000), 25.0)),
+        Seq((ts(2000), 25.0), (ts(4000), 75.0)))(b.toInt)
+        .toDF("ts", "value"), b, "ts", "value", 0.0, 100.0, 100,
+      root + "/store")),
+    ("flagship", Seq("store"), (b, root) => Pipeline.ingestFlagshipBatch(
+      Seq(Seq((1L, ts(0), "view", 10.0, 7L), (2L, ts(10), "click", 0.0, 9L)),
+        Seq((1L, ts(20), "purchase", 99.0, 7L),
+          (2L, ts(90), "view", 40.0, 8L)))(b.toInt)
+        .toDF("user_id", "ts_parsed", "event_type", "value", "k"),
+      b, root + "/store")),
+    ("near-dup", Seq("sigs", "corpus"), (b, root) =>
+      Pipeline.ingestNearDupBatch(docs(b.toInt), b, "doc_id", "text",
+        root + "/sigs", root + "/corpus", 3, 16, 4, 0.5)),
+    ("semantic", Seq("store"), (b, root) => Pipeline.ingestSemDedupBatch(
+      Seq(Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))),
+        Seq((3L, Seq(0.99, 0.01)), (4L, Seq(-1.0, 0.0))))(b.toInt)
+        .toDF("vec_id", "embedding"), b, "vec_id", "embedding",
+      Array(Array(1.0, 0.0), Array(0.0, 1.0)), root + "/store", 0.9)),
+    ("span", Seq("fps", "corpus"), (b, root) =>
+      Pipeline.ingestSpanDedupBatch(docs(b.toInt), b, "doc_id", "text",
+        root + "/fps", root + "/corpus", 16, 8)),
+    ("drift gate", Seq("admit", "quar", "audit"), (b, root) =>
+      Pipeline.ingestDriftGateBatch(
+        Seq((1 to 8).map(i => (i.toLong, 0.5 + i % 4)),
+          (9 to 16).map(i => (i.toLong, 3.5)))(b.toInt).toDF("id", "v"),
+        b, "v", edges, shares, 0.25, root + "/admit", root + "/quar",
+        root + "/audit")),
+    ("vocab gate", Seq("admit", "quar", "audit"), (b, root) =>
+      Pipeline.ingestVocabGateBatch(
+        Seq((1 to 4).map(i => (i.toLong, "alpha beta alpha beta")),
+          (5 to 8).map(i => (i.toLong, "spam casino pills spam")))(b.toInt)
+          .toDF("doc_id", "text"),
+        b, "text", Seq(("alpha", 0.5), ("beta", 0.5)), 0.5, 0.2,
+        root + "/admit", root + "/quar", root + "/audit")))
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
   test("epoch folds replay in place under a STATIC session: a replayed " +
       "epoch rewrites only itself, and no fold touches session conf") {
-    import org.apache.spark.sql.DataFrame
     val key = "spark.sql.sources.partitionOverwriteMode"
-    def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
-    val docs = Seq(
-      Seq((1L, "the quick brown fox jumps over the lazy dog"),
-        (2L, "structured streaming writes parquet epochs")),
-      Seq((3L, "a prefix then the quick brown fox jumps over the lazy dog"),
-        (4L, "a wholly unrelated sentence about feature stores")))
-      .map(_.toDF("doc_id", "text"))
-    val edges = Array(1.0, 2.0, 3.0)
-    val shares = Array(0.25, 0.25, 0.25, 0.25)
-    // each fold: its stores and its call for (epoch, store root); batch 0
-    // and batch 1 differ so that both epochs hold rows, and the gates
-    // admit batch 0 and quarantine batch 1
-    val folds: Seq[(String, Seq[String], (Long, String) => Unit)] = Seq(
-      ("histogram", Seq("store"), (b, root) => Pipeline.ingestHistogramBatch(
-        Seq(Seq((ts(0), 5.0), (ts(1), 15.0), (ts(2000), 25.0)),
-          Seq((ts(2000), 25.0), (ts(4000), 75.0)))(b.toInt)
-          .toDF("ts", "value"), b, "ts", "value", 0.0, 100.0, 100,
-        root + "/store")),
-      ("flagship", Seq("store"), (b, root) => Pipeline.ingestFlagshipBatch(
-        Seq(Seq((1L, ts(0), "view", 10.0, 7L), (2L, ts(10), "click", 0.0, 9L)),
-          Seq((1L, ts(20), "purchase", 99.0, 7L),
-            (2L, ts(90), "view", 40.0, 8L)))(b.toInt)
-          .toDF("user_id", "ts_parsed", "event_type", "value", "k"),
-        b, root + "/store")),
-      ("near-dup", Seq("sigs", "corpus"), (b, root) =>
-        Pipeline.ingestNearDupBatch(docs(b.toInt), b, "doc_id", "text",
-          root + "/sigs", root + "/corpus", 3, 16, 4, 0.5)),
-      ("semantic", Seq("store"), (b, root) => Pipeline.ingestSemDedupBatch(
-        Seq(Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))),
-          Seq((3L, Seq(0.99, 0.01)), (4L, Seq(-1.0, 0.0))))(b.toInt)
-          .toDF("vec_id", "embedding"), b, "vec_id", "embedding",
-        Array(Array(1.0, 0.0), Array(0.0, 1.0)), root + "/store", 0.9)),
-      ("span", Seq("fps", "corpus"), (b, root) =>
-        Pipeline.ingestSpanDedupBatch(docs(b.toInt), b, "doc_id", "text",
-          root + "/fps", root + "/corpus", 16, 8)),
-      ("drift gate", Seq("admit", "quar", "audit"), (b, root) =>
-        Pipeline.ingestDriftGateBatch(
-          Seq((1 to 8).map(i => (i.toLong, 0.5 + i % 4)),
-            (9 to 16).map(i => (i.toLong, 3.5)))(b.toInt).toDF("id", "v"),
-          b, "v", edges, shares, 0.25, root + "/admit", root + "/quar",
-          root + "/audit")),
-      ("vocab gate", Seq("admit", "quar", "audit"), (b, root) =>
-        Pipeline.ingestVocabGateBatch(
-          Seq((1 to 4).map(i => (i.toLong, "alpha beta alpha beta")),
-            (5 to 8).map(i => (i.toLong, "spam casino pills spam")))(b.toInt)
-            .toDF("doc_id", "text"),
-          b, "text", Seq(("alpha", 0.5), ("beta", 0.5)), 0.5, 0.2,
-          root + "/admit", root + "/quar", root + "/audit")))
     // epoch 0's files as written: name, size and modification time
     def epoch0(store: String): Set[(String, Long, Long)] =
       Option(new java.io.File(store + "/ingest_batch=0").listFiles())
         .fold(Set.empty[(String, Long, Long)])(_.map(f =>
           (f.getName, f.length, f.lastModified)).toSet)
-    def sameRows(a: DataFrame, b: DataFrame): Boolean =
-      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "STATIC")
     try folds.foreach { case (name, stores, fold) =>
-      val root = java.nio.file.Files.createTempDirectory("graft_epoch_")
-        .toString
+      val root = tempDir("graft_epoch_")
       def call(b: Long, dir: String): Unit = {
         fold(b, dir)
         assert(spark.conf.get(key) == "STATIC", s"$name wrote $key")
@@ -888,10 +883,57 @@ class StreamingSmokeSpec extends SparkSpec {
             spark.read.parquet(s"$root/once/$st")),
           s"$name/$st: the replayed store differs from a single pass")
       }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("readStore reads every fold's store with spark.read.parquet's " +
+      "schema and rows, and runs no job") {
+    val root = tempDir("graft_readstore_")
+    val stores = folds.flatMap { case (name, st, fold) =>
+      Seq(0L, 1L).foreach(fold(_, s"$root/$name"))
+      st.map(x => s"$root/$name/$x")
+    }
+    val snap = s"$root/snapshot"
+    Seq(0L, 5L).foreach(m => Pipeline.upsertSnapshot(
+      Seq((1L, ts(m), 10.0 + m), (2L, ts(m), 20.0)).toDF("user_id", "ts", "value"),
+      snap, "user_id", "ts", "value"))
+    (stores :+ snap).foreach { p =>
+      var viaStore: DataFrame = null
+      assert(jobsIn { viaStore = Pipeline.readStore(spark, p) } == 0, p)
+      val viaSpark = spark.read.parquet(p)
+      assert(viaStore.schema == viaSpark.schema, p)
+      assert(sameRows(viaStore, viaSpark), p)
+    }
+    assert(Pipeline.readStore(spark, s"$root/histogram/store")
+      .schema("ingest_batch").dataType == IntegerType)
+  }
+
+  test("job budget: ingestFlagshipBatch 2 jobs, upsertSnapshot over an " +
+      "existing store 3; a batch whose columns differ still throws") {
+    val raw = Tables.events(spark, sfDir)
+      .select($"event_id", $"ts".cast("timestamp").as("ts"), $"user_id",
+        $"event_type", $"value", $"props")
+    val root = tempDir("graft_budget_")
+    val parsed = graft.ops.Parse.parseEvents(raw)
+    Pipeline.ingestFlagshipBatch(parsed, 0L, root + "/partials")
+    // the partials' aggregation shuffle, then the epoch write
+    assert(jobsIn(Pipeline.ingestFlagshipBatch(parsed, 1L,
+      root + "/partials")) == 2)
+    val feats = Pipeline.streamingFeatures(raw)
+    val snap = root + "/snapshot"
+    Pipeline.upsertSnapshot(feats.withColumn("tb", lit(0L)), snap,
+      "user_id", "window_end", "tb")
+    // the features' shuffle, latestPerKey's shuffle, then the write
+    assert(jobsIn(Pipeline.upsertSnapshot(feats.withColumn("tb", lit(1L)),
+      snap, "user_id", "window_end", "tb")) == 3)
+    val before = spark.read.parquet(snap).collect().toSet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.upsertSnapshot(feats.drop("click_count").withColumn("tb",
+        lit(2L)), snap, "user_id", "window_end", "tb")
+    }
+    assert(spark.read.parquet(snap).collect().toSet == before)
   }
 }
